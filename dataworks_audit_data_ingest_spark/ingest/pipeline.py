@@ -1,13 +1,17 @@
 """The ingest pipeline: Spark-first rebuild of the reference's driver loop
 (`audit_data_ingest.py:36-68` and the CLI block `:235-313`).
 
-Shape (SURVEY.md §3.4): ``binaryFile`` scan → ``day`` partition filter
-(strictly greater than the watermark) → per-record compress+encrypt
-(Arrow-batched ``mapInPandas``) → ``foreachPartition`` S3 sink with
-per-object envelope metadata → per-day all-or-nothing watermark commit.
+Shape (SURVEY.md §3.4): top-level listing of the source on the driver,
+keeping ``yyyy-MM-dd`` directories strictly after the watermark → per day,
+in ascending order, one ``binaryFile`` scan of that directory alone →
+fused compress+encrypt+upload (Arrow-batched ``mapInPandas``, per-object
+envelope metadata) → one Spark job per day → per-day all-or-nothing
+watermark commit.
 
 What the reference hand-rolled and Spark absorbs (SURVEY.md §4):
-- `hdfs dfs -ls` subprocess (`:134-139`)  → distributed file index
+- `hdfs dfs -ls` subprocess (`:134-139`) → one ``FileSystem.listStatus``
+  of the top level through the session's Hadoop configuration
+  (``list_new_days``); only the new days' directories are scanned
 - `copyToLocal` staging + cleanup (`:153-166`, `:207-210`) → eliminated;
   executors read source splits directly
 - ThreadPoolExecutor fan-out (`:82-90`) → task scheduling, one task per
@@ -19,6 +23,7 @@ from __future__ import annotations
 
 import base64
 import logging
+import re
 from dataclasses import dataclass, field
 from datetime import date
 
@@ -30,6 +35,8 @@ from .crypto import EnvelopeEncryptor
 from .watermark import find_start_date, update_progress_file
 
 logger = logging.getLogger(__name__)
+
+_DAY_NAME = re.compile(r"\d{4}-\d{2}-\d{2}")
 
 _ENC_SCHEMA = (
     "day string, basename string, ciphertext binary, "
@@ -73,11 +80,11 @@ def fetch_hsm_key(
 
 
 def scan_source(spark: SparkSession, src_dir: str) -> DataFrame:
-    """R1: the `hdfs dfs -ls` + copy of the reference collapses into one
-    distributed ``binaryFile`` scan; `day` is derived from the immediate
-    parent directory name, exactly what ``filter_date`` parses
-    (`audit_data_ingest.py:26-33`). Non-date directories yield NULL and are
-    skipped (warn-and-exclude semantics, `:30-32`)."""
+    """Whole-tree ``binaryFile`` scan with ``day`` derived from each file's
+    immediate parent directory name (NULL for a non-date name), for the
+    large-file path and ``sources.read_binary_dir``. ``run_ingest`` does not
+    use it: it lists the top level first (``list_new_days``) and scans only
+    the new days (``scan_day``)."""
     tune(spark)
     df = (
         spark.read.format("binaryFile")
@@ -93,27 +100,6 @@ def scan_source(spark: SparkSession, src_dir: str) -> DataFrame:
         "length",
         "content",
     )
-
-
-def filter_after_watermark(df: DataFrame, watermark: date | None) -> DataFrame:
-    """R2: strictly-greater partition predicate — the committed day itself is
-    never reprocessed on resume (`audit_data_ingest.py:33`). With a Hive
-    `day=` layout this is pure partition pruning; here it prunes via the
-    derived column.
-
-    Deliberate deviation from the reference's first run: with no progress
-    file the reference skips ``filter_date`` entirely and would process
-    every listed path, non-dated directories included
-    (`audit_data_ingest.py:145-146`); the warn-and-exclude of non-dated
-    dirs (`:30-32`) only applies once a start date exists. Here non-dated
-    directories are ALWAYS dropped (``day IS NOT NULL``) — a non-dated dir
-    can never be watermark-committed, so processing it on run 1 and then
-    re-processing it on every subsequent run is the less defensible
-    behavior; excluding it uniformly keeps runs idempotent."""
-    df = df.filter(F.col("day").isNotNull())
-    if watermark is not None:
-        df = df.filter(F.col("day") > F.lit(watermark))
-    return df
 
 
 def encrypt_files(df: DataFrame, pem: bytes, key_id: str) -> DataFrame:
@@ -154,10 +140,13 @@ _AUDIT_SCHEMA = "day string, basename string, s3_key string, n_bytes long"
 
 
 def encrypt_and_upload(df: DataFrame, cfg: IngestConfig) -> DataFrame:
-    """Fused R4+R5+R6: compress+encrypt+upload in ONE Python stage.
+    """Fused R4+R5+R6+R11: compress+encrypt+upload in ONE Python stage.
+    Per-object metadata is outside DataFrameWriter's model, so the S3 sink
+    is Python: one boto3 client per task with botocore standard-mode
+    retries (`audit_data_ingest.py:169-197`).
 
-    The composable two-stage form (``encrypt_files`` → sink) round-trips
-    every ciphertext byte Python→JVM→Python through Arrow twice; measured
+    The composable two-stage form (``encrypt_files`` → a separate sink)
+    round-trips every ciphertext byte Python→JVM→Python through Arrow; measured
     locally that transfer, not crypto, was the ceiling (PERF.md). Fusing
     keeps ciphertext inside the task that produced it — only small audit
     rows (key, size) cross back. An action on the returned frame drives the
@@ -185,6 +174,9 @@ def encrypt_and_upload(df: DataFrame, cfg: IngestConfig) -> DataFrame:
                 pdf["day"].astype(str), pdf["basename"], pdf["content"]
             ):
                 rec = enc.encrypt_record(bytes(content))
+                # no separator inserted after the prefix; the suffix says .gz
+                # but the framing is zlib (`audit_data_ingest.py:117,:172-173`;
+                # quirks 1 & 5)
                 key = f"{cfg.s3_prefix}{day}/{basename}.gz.enc"
                 client.put_object(
                     Bucket=cfg.s3_bucket,
@@ -204,62 +196,76 @@ def encrypt_and_upload(df: DataFrame, cfg: IngestConfig) -> DataFrame:
     )
 
 
-def upload_partition_factory(cfg: IngestConfig):
-    """R6+R11: metadata-bearing S3 sink. Per-object metadata is outside
-    DataFrameWriter's model, so the sink is a ``foreachPartition`` function
-    with one boto3 client per partition and botocore standard-mode retries
-    (`audit_data_ingest.py:169-197`)."""
+def list_new_days(
+    spark: SparkSession, src_dir: str, watermark: date | None
+) -> list[tuple[date, str]]:
+    """R1+R2: the reference's `hdfs dfs -ls` + ``filter_date``
+    (`audit_data_ingest.py:26-33,134-139`) — one non-recursive listing of
+    the top level of ``src_dir`` on the driver, through the session's
+    Hadoop ``FileSystem`` (local, HDFS and S3A alike). Returns
+    ``(day, dir_uri)`` for each directory named as a zero-padded
+    ``yyyy-MM-dd`` date strictly after ``watermark``, in ascending order.
+    Nothing below the top level is touched, so committed days cost one
+    directory entry each and their files are never opened.
 
-    def upload(rows) -> None:
-        import boto3
-        from botocore.config import Config
+    Every other top-level entry gets one warning and is skipped
+    (`:30-32`). Deliberate deviation from the reference's first run: with
+    no progress file the reference skips ``filter_date`` and would process
+    non-dated directories too (`:145-146`); here they are always skipped —
+    a non-dated dir can never be watermark-committed, so processing it on
+    run 1 and again on every later run is the less defensible behavior."""
+    root = spark._jvm.org.apache.hadoop.fs.Path(src_dir)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    days = []
+    for status in fs.listStatus(root):
+        path = status.getPath()
+        day = _parse_day(path.getName()) if status.isDirectory() else None
+        if day is None:
+            logger.warning("skipping %s: not a yyyy-MM-dd directory", path)
+        elif watermark is None or day > watermark:
+            days.append((day, path.toString()))
+    return sorted(days)
 
-        client = boto3.client(
-            "s3",
-            region_name=cfg.aws_region,
-            endpoint_url=cfg.s3_endpoint_url,
-            config=Config(retries={"max_attempts": cfg.retries, "mode": "standard"}),
-            **cfg.extra_boto_kwargs,
+
+def _parse_day(name: str) -> date | None:
+    if not _DAY_NAME.fullmatch(name):
+        return None
+    try:
+        return date.fromisoformat(name)
+    except ValueError:  # well-formed but not a calendar date, e.g. 2020-02-30
+        return None
+
+
+def scan_day(spark: SparkSession, day: date, day_dir: str) -> DataFrame:
+    """The files of one day directory, nested ones included, as the fused
+    kernel's ``(day, basename, content)`` records. ``day`` is a literal from
+    the directory name, so the scan reads only this directory."""
+    return (
+        spark.read.format("binaryFile")
+        .option("recursiveFileLookup", "true")
+        .load(day_dir)
+        .select(
+            F.lit(day.isoformat()).alias("day"),
+            F.element_at(F.split("path", "/"), -1).alias("basename"),
+            "content",
         )
-        for row in rows:
-            # key layout: f"{prefix}{day}/{basename}.gz.enc" — no separator
-            # inserted after the prefix, suffix says .gz but framing is zlib
-            # (`audit_data_ingest.py:117,:172-173`; quirks 1 & 5).
-            key = f"{cfg.s3_prefix}{row['day']}/{row['basename']}.gz.enc"
-            client.put_object(
-                Bucket=cfg.s3_bucket,
-                Key=key,
-                Body=bytes(row["ciphertext"]),
-                Metadata={
-                    "iv": row["iv"],
-                    "ciphertext": row["encrypted_key"],
-                    "datakeyencryptionkeyid": row["key_id"],
-                },
-            )
-
-    return upload
+    )
 
 
 def run_ingest(spark: SparkSession, cfg: IngestConfig) -> list[date]:
     """R13: the per-day driver loop. Days are processed in ascending order;
-    each day is one Spark action; the watermark is committed only after the
-    whole day succeeded — any task failure fails the job and the day is
-    retried wholesale on the next run (at-least-once over an idempotent
-    overwrite sink, `audit_data_ingest.py:49-68,96-104`).
+    each day is ONE Spark job (the fused kernel plus a ``collect`` of its
+    audit rows); the watermark is committed only after the whole day
+    succeeded — any task failure fails the job and the day is retried
+    wholesale on the next run (at-least-once over an idempotent overwrite
+    sink, `audit_data_ingest.py:49-68,96-104`). A day directory that holds
+    no files uploads nothing and is not committed.
 
     Returns the list of committed days.
     """
+    tune(spark)
     watermark = find_start_date(cfg.progress_file)
-    scanned = filter_after_watermark(scan_source(spark, cfg.src_dir), watermark)
-    # listing-only pass (content pruned): day inventory + bytes per day, used
-    # to size file partitions so small files don't serialize onto few tasks
-    day_stats = {
-        r["day"]: int(r["total_bytes"])
-        for r in scanned.groupBy("day")
-        .agg(F.sum("length").alias("total_bytes"))
-        .collect()
-    }
-    days = sorted(day_stats)
+    days = list_new_days(spark, cfg.src_dir, watermark)
     if not days:
         logger.info("nothing newer than %s under %s", watermark, cfg.src_dir)
         return []
@@ -271,16 +277,18 @@ def run_ingest(spark: SparkSession, cfg: IngestConfig) -> list[date]:
     # maxPartitionBytes below default only added per-task overhead
     # (measured 38→26 MB/s); the defaults are kept deliberately.
     committed: list[date] = []
-    for day in days:
-        day_df = scanned.filter(F.col("day") == F.lit(day))
-        n_uploaded = encrypt_and_upload(day_df, cfg).count()
+    for day, day_dir in days:
+        audit = encrypt_and_upload(scan_day(spark, day, day_dir), cfg).collect()
+        if not audit:
+            logger.info("day %s holds no files; not committed", day)
+            continue
         # reaching here means every task of the day's job succeeded
         update_progress_file(cfg.progress_file, day)
         committed.append(day)
         logger.info(
-            "committed day %s (%d objects, %d bytes in)",
+            "committed day %s (%d objects, %d ciphertext bytes)",
             day,
-            n_uploaded,
-            day_stats[day],
+            len(audit),
+            sum(r.n_bytes for r in audit),
         )
     return committed

@@ -26,7 +26,11 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..ingest.pipeline import IngestConfig, encrypt_files, upload_partition_factory
+from ..ingest.pipeline import IngestConfig, encrypt_and_upload
+# Not called here any more: both ingest sinks use the fused kernel. It stays
+# importable from this module because perfbench's traced run wraps
+# ``streaming.jobs.encrypt_files`` (perfbench/workloads.py).
+from ..ingest.pipeline import encrypt_files  # noqa: F401
 from ..session import tune
 
 EVENT_SCHEMA = StructType(
@@ -102,6 +106,13 @@ def dedup_events_within_watermark(
     )
 
 
+def _upload_batch(batch_df: DataFrame, cfg: IngestConfig) -> None:
+    """One Spark job per micro-batch: the fused compress+encrypt+upload
+    kernel, driven by the ``noop`` sink so ciphertext stays inside the task
+    that made it and no audit rows travel to the driver."""
+    encrypt_and_upload(batch_df, cfg).write.format("noop").mode("overwrite").save()
+
+
 def start_encrypted_ingest_stream(
     spark: SparkSession,
     cfg: IngestConfig,
@@ -111,10 +122,10 @@ def start_encrypted_ingest_stream(
     """Streaming twin of ``ingest.run_ingest``: binaryFile stream →
     compress+encrypt → per-batch metadata-bearing S3 sink.
 
-    ``foreachBatch`` reuses the batch pipeline's encrypt stage and sink
-    function unchanged; the commit log in ``checkpoint_dir`` provides the
-    once-per-file guarantee the reference built by hand with its progress
-    file + all-or-nothing day loop (`audit_data_ingest.py:50-68`).
+    ``foreachBatch`` runs the batch pipeline's fused kernel unchanged; the
+    commit log in ``checkpoint_dir`` provides the once-per-file guarantee
+    the reference built by hand with its progress file + all-or-nothing
+    day loop (`audit_data_ingest.py:50-68`).
     """
     tune(spark)
     # streaming sources require an explicit schema; this is binaryFile's fixed one
@@ -138,8 +149,7 @@ def start_encrypted_ingest_stream(
     )
 
     def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-        enc = encrypt_files(batch_df, cfg.rsa_public_key_pem, cfg.hsm_key_id)
-        enc.foreachPartition(upload_partition_factory(cfg))
+        _upload_batch(batch_df, cfg)
 
     writer = files.writeStream.foreachBatch(sink_batch).option(
         "checkpointLocation", checkpoint_dir
@@ -216,8 +226,7 @@ def start_synthetic_encrypted_ingest_stream(
     records = synthetic_event_records(events)
 
     def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-        enc = encrypt_files(batch_df, cfg.rsa_public_key_pem, cfg.hsm_key_id)
-        enc.foreachPartition(upload_partition_factory(cfg))
+        _upload_batch(batch_df, cfg)
 
     writer = records.writeStream.foreachBatch(sink_batch).option(
         "checkpointLocation", checkpoint_dir

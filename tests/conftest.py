@@ -176,9 +176,13 @@ def pytest_collection_modifyitems(config, items):
             "the verify window",
             stacklevel=1,
         )
+    # a slow file named on the command line (`pytest tests/test_streaming.py`
+    # or `...::test_x`) is a targeted run: its tests are not deselected
+    paths = (arg.split("::", 1)[0] for arg in config.args)
+    named = {os.path.basename(p) for p in paths if p.endswith(".py")}
     for item in items:
         base = os.path.basename(str(item.fspath))
-        if base in _SLOW_FILES:
+        if base in _SLOW_FILES and base not in named:
             item.add_marker(slow)
             continue
         if base == "test_queries_oracle.py" and item.originalname in _ORACLE_SWEEPS:

@@ -64,6 +64,43 @@ def _cfg(src, tmp_path, moto_s3, pub_pem, bucket="publish-bucket"):
     )
 
 
+def _decrypt(priv, obj) -> bytes:
+    meta = obj["Metadata"]
+    session_key = priv.decrypt(
+        base64.b64decode(meta["ciphertext"]),
+        padding.OAEP(
+            mgf=padding.MGF1(algorithm=hashes.SHA256()),
+            algorithm=hashes.SHA256(),
+            label=None,
+        ),
+    )
+    body = obj["Body"].read()
+    assert body[:1] != b"\x78"  # ciphertext, not plaintext zlib
+    return zlib.decompress(
+        eax_decrypt(session_key, base64.b64decode(meta["iv"]), body)
+    )
+
+
+def _keys(moto_s3, bucket) -> list[str]:
+    s3 = boto3.client("s3", region_name="eu-west-2", endpoint_url=moto_s3)
+    return sorted(
+        o["Key"] for o in s3.list_objects_v2(Bucket=bucket).get("Contents", [])
+    )
+
+
+def _tree(root, files: dict[str, bytes]):
+    """Write ``{relative path: bytes}`` under ``root``; a path ending in
+    ``/`` makes an empty directory."""
+    for rel, data in files.items():
+        path = root / rel
+        if rel.endswith("/"):
+            path.mkdir(parents=True, exist_ok=True)
+            continue
+        path.parent.mkdir(parents=True, exist_ok=True)
+        path.write_bytes(data)
+    return root
+
+
 def test_end_to_end_roundtrip(spark, moto_s3, rsa_keypair, src_tree, tmp_path):
     priv, pub_pem = rsa_keypair
     cfg = _cfg(src_tree, tmp_path, moto_s3, pub_pem)
@@ -89,20 +126,7 @@ def test_end_to_end_roundtrip(spark, moto_s3, rsa_keypair, src_tree, tmp_path):
     assert meta["datakeyencryptionkeyid"] == "cloudhsm:1,2"
 
     # golden round trip: RSA-unwrap session key → EAX decrypt → zlib inflate
-    session_key = priv.decrypt(
-        base64.b64decode(meta["ciphertext"]),
-        padding.OAEP(
-            mgf=padding.MGF1(algorithm=hashes.SHA256()),
-            algorithm=hashes.SHA256(),
-            label=None,
-        ),
-    )
-    body = obj["Body"].read()
-    assert body[:1] != b"\x78"  # ciphertext, not plaintext zlib
-    plain = zlib.decompress(
-        eax_decrypt(session_key, base64.b64decode(meta["iv"]), body)
-    )
-    assert plain == PAYLOAD_1
+    assert _decrypt(priv, obj) == PAYLOAD_1
 
     # watermark advanced to the last committed day
     assert find_start_date(cfg.progress_file) == date(2020, 10, 10)
@@ -210,3 +234,131 @@ def test_two_dataset_deployments_share_code_independent_watermarks(
     # independent watermarks
     assert str(find_start_date(audit_cfg.progress_file)) == "2020-10-10"
     assert str(find_start_date(eq_cfg.progress_file)) == "2021-01-05"
+
+
+def test_committed_days_are_never_opened(spark, moto_s3, rsa_keypair, tmp_path):
+    """The listing prunes committed days before any scan: a file too large
+    for ``binaryFile`` to read, sitting in an already-committed day, must
+    not fail the resume (a scan that opened it would, FAILED_READ_FILE)."""
+    _, pub_pem = rsa_keypair
+    src = _tree(
+        tmp_path / "src",
+        {"2020-10-09/big.json": b"x" * 1000, "2020-10-10/small.json": PAYLOAD_2},
+    )
+    cfg = _cfg(src, tmp_path, moto_s3, pub_pem, bucket="pruned-bucket")
+    update_progress_file(cfg.progress_file, date(2020, 10, 9))
+    spark.conf.set("spark.sql.sources.binaryFile.maxLength", "500")
+    try:
+        assert run_ingest(spark, cfg) == [date(2020, 10, 10)]
+    finally:
+        spark.conf.unset("spark.sql.sources.binaryFile.maxLength")
+    assert _keys(moto_s3, cfg.s3_bucket) == [
+        "audit-data/2020-10-10/small.json.gz.enc"
+    ]
+
+
+def test_nested_file_belongs_to_its_top_level_day(
+    spark, moto_s3, rsa_keypair, tmp_path
+):
+    """A day is a top-level dated directory; files below it, at any depth,
+    land under that day with their own basename."""
+    priv, pub_pem = rsa_keypair
+    src = _tree(tmp_path / "src", {"2020-10-09/sub/deep/nested.json": PAYLOAD_1})
+    cfg = _cfg(src, tmp_path, moto_s3, pub_pem, bucket="nested-bucket")
+    assert run_ingest(spark, cfg) == [date(2020, 10, 9)]
+    key = "audit-data/2020-10-09/nested.json.gz.enc"
+    assert _keys(moto_s3, cfg.s3_bucket) == [key]
+    s3 = boto3.client("s3", region_name="eu-west-2", endpoint_url=moto_s3)
+    assert _decrypt(priv, s3.get_object(Bucket=cfg.s3_bucket, Key=key)) == PAYLOAD_1
+
+
+def test_dated_dir_under_non_dated_parent_is_skipped_with_warning(
+    spark, moto_s3, rsa_keypair, tmp_path, caplog
+):
+    """Only top-level names are parsed (SURVEY quirk 7): `not-a-date/` is
+    skipped with one warning, and the dated directory inside it with it."""
+    _, pub_pem = rsa_keypair
+    src = _tree(
+        tmp_path / "src",
+        {
+            "2020-10-09/a.json": PAYLOAD_1,
+            "not-a-date/2020-10-11/x.json": PAYLOAD_2,
+            "2020-02-30/bad-calendar.json": b"nope",
+        },
+    )
+    cfg = _cfg(src, tmp_path, moto_s3, pub_pem, bucket="nondated-bucket")
+    with caplog.at_level("WARNING", logger="dataworks_audit_data_ingest_spark"):
+        assert run_ingest(spark, cfg) == [date(2020, 10, 9)]
+    assert _keys(moto_s3, cfg.s3_bucket) == ["audit-data/2020-10-09/a.json.gz.enc"]
+    skipped = sorted(
+        str(r.args[0]).rsplit("/", 1)[-1]
+        for r in caplog.records
+        if r.levelname == "WARNING" and r.msg.startswith("skipping")
+    )
+    assert skipped == ["2020-02-30", "not-a-date"]
+
+
+def test_empty_newest_day_is_not_committed(spark, moto_s3, rsa_keypair, tmp_path):
+    _, pub_pem = rsa_keypair
+    src = _tree(tmp_path / "src", {"2020-10-09/a.json": PAYLOAD_1, "2020-10-10/": b""})
+    cfg = _cfg(src, tmp_path, moto_s3, pub_pem, bucket="empty-day-bucket")
+    assert run_ingest(spark, cfg) == [date(2020, 10, 9)]
+    assert find_start_date(cfg.progress_file) == date(2020, 10, 9)
+    assert _keys(moto_s3, cfg.s3_bucket) == ["audit-data/2020-10-09/a.json.gz.enc"]
+
+
+def test_one_spark_job_per_committed_day(spark, moto_s3, rsa_keypair, tmp_path):
+    """The listing runs on the driver and each day is one job: the fused
+    kernel plus the collect of its audit rows."""
+    _, pub_pem = rsa_keypair
+    src = _tree(
+        tmp_path / "src",
+        {
+            f"2020-10-{d:02d}/f{i}.json": PAYLOAD_1
+            for d in (9, 10, 11)
+            for i in range(3)
+        },
+    )
+    cfg = _cfg(src, tmp_path, moto_s3, pub_pem, bucket="jobs-bucket")
+    sc = spark.sparkContext
+    sc.setJobGroup("ingest-job-count", "run_ingest job count")
+    try:
+        committed = run_ingest(spark, cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(committed) == 3
+    # job-start events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("ingest-job-count")) == 3
+
+
+def test_encrypted_stream_drain_and_resume(spark, moto_s3, rsa_keypair, tmp_path):
+    """Fast smoke of the streaming sink (the fused kernel under
+    ``foreachBatch``): an availableNow drain uploads every dated file with
+    3-field metadata that decrypts; a resume from the same checkpoint
+    uploads only the file that arrived since."""
+    from dataworks_audit_data_ingest_spark.streaming.jobs import (
+        start_encrypted_ingest_stream,
+    )
+
+    priv, pub_pem = rsa_keypair
+    src = _tree(tmp_path / "src", {"2021-01-01/f1.json": PAYLOAD_1})
+    cfg = _cfg(src, tmp_path, moto_s3, pub_pem, bucket="stream-smoke-bucket")
+    ckpt = str(tmp_path / "ckpt")
+    s3 = boto3.client("s3", region_name="eu-west-2", endpoint_url=moto_s3)
+
+    start_encrypted_ingest_stream(spark, cfg, ckpt).awaitTermination(120)
+    first = "audit-data/2021-01-01/f1.json.gz.enc"
+    assert _keys(moto_s3, cfg.s3_bucket) == [first]
+    etag = s3.head_object(Bucket=cfg.s3_bucket, Key=first)["ETag"]
+
+    _tree(src, {"2021-01-02/f2.json": PAYLOAD_2})
+    start_encrypted_ingest_stream(spark, cfg, ckpt).awaitTermination(120)
+    second = "audit-data/2021-01-02/f2.json.gz.enc"
+    assert _keys(moto_s3, cfg.s3_bucket) == [first, second]
+    # the resumed drain did not re-upload the committed file
+    assert s3.head_object(Bucket=cfg.s3_bucket, Key=first)["ETag"] == etag
+    for key, payload in ((first, PAYLOAD_1), (second, PAYLOAD_2)):
+        obj = s3.get_object(Bucket=cfg.s3_bucket, Key=key)
+        assert set(obj["Metadata"]) == {"iv", "ciphertext", "datakeyencryptionkeyid"}
+        assert _decrypt(priv, obj) == payload
