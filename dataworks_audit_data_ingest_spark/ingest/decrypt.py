@@ -15,34 +15,15 @@ key per-executor from the HSM/KMS instead (the seam is ``key_provider``).
 
 from __future__ import annotations
 
-import base64
-import zlib
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..functions.localrel import local_rows_df
-
 from ..session import tune
-from .crypto import eax_decrypt
-from .pipeline import IngestConfig
+from .crypto import decrypt_object
+from .pipeline import IngestConfig, list_objects, parse_object_key, s3_client
 
 _DEC_SCHEMA = "s3_key string, day string, basename string, payload binary"
-
-
-def _unwrap_session_key(private_key_pem: bytes, wrapped_b64: str) -> bytes:
-    from cryptography.hazmat.primitives import hashes, serialization
-    from cryptography.hazmat.primitives.asymmetric import padding
-
-    priv = serialization.load_pem_private_key(private_key_pem, password=None)
-    return priv.decrypt(
-        base64.b64decode(wrapped_b64),
-        padding.OAEP(
-            mgf=padding.MGF1(algorithm=hashes.SHA256()),
-            algorithm=hashes.SHA256(),
-            label=None,
-        ),
-    )
 
 
 def read_encrypted_objects(
@@ -54,14 +35,12 @@ def read_encrypted_objects(
     """DataFrame of decrypted payloads for every object under the configured
     prefix: (s3_key, day, basename, payload).
 
-    Listing is a driver-side metadata pass (keys + sizes only); object
+    Listing is a driver-side metadata pass (``list_objects``); object
     bodies are fetched and decrypted by executor tasks. ``key_provider``
     (executor-side callable) overrides the closure-shipped private key for
     KMS-style deployments — without it the PEM travels inside the task
     closure, so RPC encryption should be on (warned below).
     """
-    import boto3
-
     tune(spark)
     if key_provider is None and (
         spark.conf.get("spark.io.encryption.enabled", "false").lower() != "true"
@@ -75,58 +54,22 @@ def read_encrypted_objects(
             "executor-side fetch, e.g. from KMS/SSM) or enable RPC "
             "encryption in production."
         )
-    client = boto3.client(
-        "s3",
-        region_name=cfg.aws_region,
-        endpoint_url=cfg.s3_endpoint_url,
-        **cfg.extra_boto_kwargs,
-    )
-    keys: list[str] = []
-    paginator = client.get_paginator("list_objects_v2")
-    for page in paginator.paginate(Bucket=cfg.s3_bucket, Prefix=cfg.s3_prefix):
-        keys.extend(o["Key"] for o in page.get("Contents", []))
-    keys_df = local_rows_df(spark, [(k,) for k in keys], "s3_key string")
-
-    bucket, region, endpoint, extra = (
-        cfg.s3_bucket,
-        cfg.aws_region,
-        cfg.s3_endpoint_url,
-        cfg.extra_boto_kwargs,
-    )
+    keys_df, _ = list_objects(spark, cfg)
 
     def fetch(batches: Iterator) -> Iterator:
-        import boto3
         import pandas as pd
 
-        s3 = boto3.client(
-            "s3", region_name=region, endpoint_url=endpoint, **extra
-        )
+        s3 = s3_client(cfg)
         pem = key_provider() if key_provider is not None else private_key_pem
         for pdf in batches:
-            out = {"s3_key": [], "day": [], "basename": [], "payload": []}
+            rows = []
             for key in pdf["s3_key"]:
-                obj = s3.get_object(Bucket=bucket, Key=key)
-                meta = obj["Metadata"]
-                session_key = _unwrap_session_key(pem, meta["ciphertext"])
-                payload = zlib.decompress(
-                    eax_decrypt(
-                        session_key,
-                        base64.b64decode(meta["iv"]),
-                        obj["Body"].read(),
-                    )
-                )
-                parts = key.rsplit("/", 2)
-                out["s3_key"].append(key)
-                out["day"].append(parts[-2] if len(parts) >= 2 else "")
-                name = parts[-1]
-                out["basename"].append(
-                    name[: -len(".gz.enc")] if name.endswith(".gz.enc") else name
-                )
-                out["payload"].append(payload)
-            yield pd.DataFrame(out)
+                obj = s3.get_object(Bucket=cfg.s3_bucket, Key=key)
+                payload = decrypt_object(pem, obj["Metadata"], obj["Body"].read())
+                rows.append((key, *parse_object_key(cfg.s3_prefix, key), payload))
+            yield pd.DataFrame(rows, columns=["s3_key", "day", "basename", "payload"])
 
-    n = max(1, min(len(keys), spark.sparkContext.defaultParallelism))
-    return keys_df.repartition(n).mapInPandas(fetch, schema=_DEC_SCHEMA)
+    return keys_df.mapInPandas(fetch, schema=_DEC_SCHEMA)
 
 
 def read_encrypted_json(

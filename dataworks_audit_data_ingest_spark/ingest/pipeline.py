@@ -8,6 +8,12 @@ fused compress+encrypt+upload (Arrow-batched ``mapInPandas``, per-object
 envelope metadata) → one Spark job per day → per-day all-or-nothing
 watermark commit.
 
+This module also owns the S3 side of the object contract, once: the client
+(``s3_client``), the key layout (``object_key`` / ``parse_object_key``),
+the prefix listing (``list_objects``), the day rule (``_parse_day`` on the
+driver, ``file_columns`` in SQL) and the per-object envelope → key → put
+routine shared by the blob kernel and the large-file kernel.
+
 What the reference hand-rolled and Spark absorbs (SURVEY.md §4):
 - `hdfs dfs -ls` subprocess (`:134-139`) → one ``FileSystem.listStatus``
   of the top level through the session's Hadoop configuration
@@ -22,26 +28,36 @@ What the reference hand-rolled and Spark absorbs (SURVEY.md §4):
 from __future__ import annotations
 
 import base64
+import io
 import logging
 import re
 from dataclasses import dataclass, field
 from datetime import date
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.localrel import local_rows_df
 from ..session import tune
 from .crypto import EnvelopeEncryptor
 from .watermark import find_start_date, update_progress_file
 
 logger = logging.getLogger(__name__)
 
-_DAY_NAME = re.compile(r"\d{4}-\d{2}-\d{2}")
+# A day directory name: a zero-padded yyyy-MM-dd (year 0000 does not exist).
+# One pattern for the driver (``_parse_day``) and SQL (``file_columns``).
+_DAY_NAME = r"(?!0000)[0-9]{4}-[0-9]{2}-[0-9]{2}"
+
+# No separator inserted after the prefix; the suffix says .gz but the framing
+# is zlib (`audit_data_ingest.py:117,:172-173`; quirks 1 & 5).
+_KEY_SUFFIX = ".gz.enc"
 
 _ENC_SCHEMA = (
     "day string, basename string, ciphertext binary, "
     "iv string, encrypted_key string, key_id string"
 )
+
+_AUDIT_SCHEMA = "day string, basename string, s3_key string, n_bytes long"
 
 
 @dataclass
@@ -79,27 +95,132 @@ def fetch_hsm_key(
     return base64.b64decode(value)
 
 
+def s3_client(cfg: IngestConfig):
+    """The S3 client of every ingest, decrypt and rotate task and listing:
+    the configured region and endpoint, botocore standard-mode retries
+    (`audit_data_ingest.py:169-197`)."""
+    import boto3
+    from botocore.config import Config
+
+    config = Config(retries={"max_attempts": cfg.retries, "mode": "standard"})
+    return boto3.client("s3", region_name=cfg.aws_region, config=config,
+                        endpoint_url=cfg.s3_endpoint_url, **cfg.extra_boto_kwargs)
+
+
+def object_key(prefix: str, day: str, basename: str) -> str:
+    """The reference's object key: prefix, day, ``/``, basename, suffix."""
+    return f"{prefix}{day}/{basename}{_KEY_SUFFIX}"
+
+
+def parse_object_key(prefix: str, key: str) -> tuple[str, str]:
+    """Inverse of :func:`object_key`: ``(day, basename)``. A key outside the
+    layout keeps what it has: no ``/`` after the prefix gives day ``""``."""
+    day, _, name = key.removeprefix(prefix).rpartition("/")
+    return day, name.removesuffix(_KEY_SUFFIX)
+
+
+def _spread(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """Driver-side rows as a JVM local relation, one row per task up to
+    ``defaultParallelism`` tasks."""
+    n = max(1, min(len(rows), spark.sparkContext.defaultParallelism))
+    return local_rows_df(spark, rows, schema).repartition(n)
+
+
+def list_objects(spark: SparkSession, cfg: IngestConfig) -> tuple[DataFrame, int]:
+    """Every key under the configured prefix — a driver-side metadata pass,
+    keys only — as an ``s3_key`` frame spread over the cluster, and the key
+    count. Object bodies are left to executor tasks."""
+    pages = s3_client(cfg).get_paginator("list_objects_v2").paginate(
+        Bucket=cfg.s3_bucket, Prefix=cfg.s3_prefix
+    )
+    keys = [(o["Key"],) for page in pages for o in page.get("Contents", [])]
+    return _spread(spark, keys, "s3_key string"), len(keys)
+
+
+def _put_envelope(client, enc: EnvelopeEncryptor, cfg: IngestConfig,
+                  day: str, basename: str, src) -> tuple[str, str, str, int]:
+    """The per-object contract of both kernels: envelope → key → put.
+    ``src`` is a row's content (bytes: one ``put_object``) or a local file
+    path (str: streamed through ``upload_fileobj``'s multipart uploader, so
+    the file is never whole in memory). Returns the audit row."""
+    key = object_key(cfg.s3_prefix, day, basename)
+    if isinstance(src, str):
+        with open(src, "rb") as f:
+            stream, meta = enc.seal(f)
+            client.upload_fileobj(
+                stream, cfg.s3_bucket, key, ExtraArgs={"Metadata": meta}
+            )
+    else:
+        stream, meta = enc.seal(io.BytesIO(src))
+        client.put_object(
+            Bucket=cfg.s3_bucket, Key=key, Body=stream.read(), Metadata=meta
+        )
+    return day, basename, key, stream.bytes_out
+
+
+def _upload(df: DataFrame, cfg: IngestConfig, source: str) -> DataFrame:
+    """``mapInPandas`` of :func:`_put_envelope` over ``(day, basename,
+    source)`` rows: one S3 client and one encryptor per task, audit rows out."""
+
+    def batches(it):
+        import pandas as pd
+
+        client = s3_client(cfg)
+        enc = EnvelopeEncryptor(cfg.rsa_public_key_pem, cfg.hsm_key_id)
+        for pdf in it:
+            rows = [
+                _put_envelope(client, enc, cfg, day, basename, src)
+                for day, basename, src in zip(
+                    pdf["day"].astype(str), pdf["basename"], pdf[source]
+                )
+            ]
+            yield pd.DataFrame(rows, columns=["day", "basename", "s3_key", "n_bytes"])
+
+    # guide §4: ship only the three columns the kernel reads
+    return df.select("day", "basename", source).mapInPandas(
+        batches, schema=_AUDIT_SCHEMA
+    )
+
+
+def _hadoop_root(spark: SparkSession, src_dir: str):
+    """``(FileSystem, qualified Path)`` of ``src_dir`` through the session's
+    Hadoop configuration (local, HDFS and S3A alike)."""
+    jvm = spark._jvm
+    root = jvm.org.apache.hadoop.fs.Path(src_dir)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs, fs.makeQualified(root)
+
+
+def _basename() -> Column:
+    return F.element_at(F.split("path", "/"), -1).alias("basename")
+
+
+def file_columns(spark: SparkSession, src_dir: str) -> list[Column]:
+    """``basename`` and ``day`` of a ``binaryFile`` read of ``src_dir``
+    (batch or stream), from its ``path``. ``day`` is the file's top-level
+    directory when that directory passes ``_parse_day`` (the rule of
+    ``list_new_days``), else NULL: nested files belong to their top-level
+    day, and a dated directory under a non-dated one has no day."""
+    _, root = _hadoop_root(spark, src_dir)
+    quoted = spark._jvm.java.util.regex.Pattern.quote(root.toString().rstrip("/") + "/")
+    top = F.regexp_extract("path", f"^{quoted}([^/]+)/", 1)
+    day = F.when(top.rlike(f"^{_DAY_NAME}$"), F.try_to_date(top, "yyyy-MM-dd"))
+    return [_basename(), day.alias("day")]
+
+
 def scan_source(spark: SparkSession, src_dir: str) -> DataFrame:
-    """Whole-tree ``binaryFile`` scan with ``day`` derived from each file's
-    immediate parent directory name (NULL for a non-date name), for the
-    large-file path and ``sources.read_binary_dir``. ``run_ingest`` does not
-    use it: it lists the top level first (``list_new_days``) and scans only
-    the new days (``scan_day``)."""
+    """Whole-tree ``binaryFile`` scan as ``(path, basename, day, length,
+    content)``, ``day`` per :func:`file_columns`, for the large-file listing
+    and ``sources.read_binary_dir``. ``run_ingest`` does not use it: it
+    lists the top level first (``list_new_days``) and scans only the new
+    days (``scan_day``)."""
     tune(spark)
     df = (
         spark.read.format("binaryFile")
         .option("recursiveFileLookup", "true")
         .load(src_dir)
     )
-    return df.select(
-        "path",
-        F.element_at(F.split("path", "/"), -1).alias("basename"),
-        F.expr(
-            r"TRY_TO_DATE(REGEXP_EXTRACT(path, '([^/]+)/[^/]+$', 1), 'yyyy-MM-dd')"
-        ).alias("day"),
-        "length",
-        "content",
-    )
+    return df.select("path", *file_columns(spark, src_dir), "length", "content")
 
 
 def encrypt_files(df: DataFrame, pem: bytes, key_id: str) -> DataFrame:
@@ -136,64 +257,59 @@ def encrypt_files(df: DataFrame, pem: bytes, key_id: str) -> DataFrame:
     )
 
 
-_AUDIT_SCHEMA = "day string, basename string, s3_key string, n_bytes long"
-
-
 def encrypt_and_upload(df: DataFrame, cfg: IngestConfig) -> DataFrame:
     """Fused R4+R5+R6+R11: compress+encrypt+upload in ONE Python stage.
     Per-object metadata is outside DataFrameWriter's model, so the S3 sink
-    is Python: one boto3 client per task with botocore standard-mode
-    retries (`audit_data_ingest.py:169-197`).
+    is Python: one boto3 client per task (``s3_client``).
 
     The composable two-stage form (``encrypt_files`` → a separate sink)
     round-trips every ciphertext byte Python→JVM→Python through Arrow; measured
     locally that transfer, not crypto, was the ceiling (PERF.md). Fusing
     keeps ciphertext inside the task that produced it — only small audit
-    rows (key, size) cross back. An action on the returned frame drives the
-    upload; all-or-nothing day semantics are unchanged (any task failure
-    fails the job before the watermark commit).
+    rows (day, basename, key, size) cross back. An action on the returned
+    frame drives the upload; all-or-nothing day semantics are unchanged (any
+    task failure fails the job before the watermark commit).
     """
-    pem, key_id = cfg.rsa_public_key_pem, cfg.hsm_key_id
+    return _upload(df, cfg, "content")
 
-    def batches(it):
-        import boto3
-        import pandas as pd
-        from botocore.config import Config
 
-        client = boto3.client(
-            "s3",
-            region_name=cfg.aws_region,
-            endpoint_url=cfg.s3_endpoint_url,
-            config=Config(retries={"max_attempts": cfg.retries, "mode": "standard"}),
-            **cfg.extra_boto_kwargs,
-        )
-        enc = EnvelopeEncryptor(pem, key_id)
-        for pdf in it:
-            out = {"day": [], "basename": [], "s3_key": [], "n_bytes": []}
-            for day, basename, content in zip(
-                pdf["day"].astype(str), pdf["basename"], pdf["content"]
-            ):
-                rec = enc.encrypt_record(bytes(content))
-                # no separator inserted after the prefix; the suffix says .gz
-                # but the framing is zlib (`audit_data_ingest.py:117,:172-173`;
-                # quirks 1 & 5)
-                key = f"{cfg.s3_prefix}{day}/{basename}.gz.enc"
-                client.put_object(
-                    Bucket=cfg.s3_bucket,
-                    Key=key,
-                    Body=rec.ciphertext,
-                    Metadata=rec.metadata(),
-                )
-                out["day"].append(day)
-                out["basename"].append(basename)
-                out["s3_key"].append(key)
-                out["n_bytes"].append(len(rec.ciphertext))
-            yield pd.DataFrame(out)
-
-    # guide §4: ship only the three columns the fused kernel reads
-    return df.select("day", "basename", "content").mapInPandas(
-        batches, schema=_AUDIT_SCHEMA
+def list_files(spark: SparkSession, src_dir: str) -> DataFrame:
+    """The large-file listing: ``(path, basename, day)`` of every file with
+    a day. ``content`` is never selected, so the scan stays a metadata pass
+    (asserted by tests/test_plans.py)."""
+    return scan_source(spark, src_dir).select("path", "basename", "day").filter(
+        F.col("day").isNotNull()
     )
+
+
+def encrypt_and_upload_large(files: DataFrame, cfg: IngestConfig) -> DataFrame:
+    """The large-file path: paths, not blobs. ``binaryFile`` content is a
+    ``binary`` column, capped at 2 GiB and whole in memory (SURVEY.md §4,
+    §7 hard-part 4); here each task streams its local file through the
+    compress+encrypt transform into boto3's multipart uploader, in memory
+    O(chunk + compressor state) whatever the file size. Same envelope and
+    same key as :func:`encrypt_and_upload`, and identical ciphertext for the
+    same session key and nonce.
+
+    ``files`` holds ``(path, basename, day)`` rows (:func:`list_files`). The
+    paths are collected on the driver, which raises ``ValueError`` before
+    any upload if one is not a ``file:`` path: Python tasks read HDFS only
+    through ``binaryFile`` content, i.e. through :func:`run_ingest`. One
+    file per task, up to ``defaultParallelism`` tasks. Returns the audit rows
+    ``(day, basename, s3_key, n_bytes)``; an action on them drives the upload.
+    """
+    rows = files.select("path", "day", "basename").collect()
+    remote = sorted(r.path for r in rows if not r.path.startswith("file:"))
+    if remote:
+        raise ValueError(
+            f"encrypt_and_upload_large streams local files only; {len(remote)} "
+            f"source(s) are not file: paths, e.g. {remote[0]} (use run_ingest)"
+        )
+    todo = [(r.path[len("file:"):], str(r.day), r.basename) for r in rows]
+    spread = _spread(
+        files.sparkSession, todo, "path string, day string, basename string"
+    )
+    return _upload(spread, cfg, "path")
 
 
 def list_new_days(
@@ -214,8 +330,7 @@ def list_new_days(
     non-dated directories too (`:145-146`); here they are always skipped —
     a non-dated dir can never be watermark-committed, so processing it on
     run 1 and again on every later run is the less defensible behavior."""
-    root = spark._jvm.org.apache.hadoop.fs.Path(src_dir)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, root = _hadoop_root(spark, src_dir)
     days = []
     for status in fs.listStatus(root):
         path = status.getPath()
@@ -228,7 +343,7 @@ def list_new_days(
 
 
 def _parse_day(name: str) -> date | None:
-    if not _DAY_NAME.fullmatch(name):
+    if not re.fullmatch(_DAY_NAME, name):
         return None
     try:
         return date.fromisoformat(name)
@@ -244,11 +359,7 @@ def scan_day(spark: SparkSession, day: date, day_dir: str) -> DataFrame:
         spark.read.format("binaryFile")
         .option("recursiveFileLookup", "true")
         .load(day_dir)
-        .select(
-            F.lit(day.isoformat()).alias("day"),
-            F.element_at(F.split("path", "/"), -1).alias("basename"),
-            "content",
-        )
+        .select(F.lit(day.isoformat()).alias("day"), _basename(), "content")
     )
 
 

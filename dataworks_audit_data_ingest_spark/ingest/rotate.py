@@ -21,7 +21,7 @@ Properties the drill pins:
   `tests/test_audit_data_ingest.py:26`) is preserved verbatim.
 
 Scale shape: listing is the driver-side metadata pass `decrypt.py`
-already uses; the per-object work (one RSA unwrap + one RSA wrap + one
+also uses (``pipeline.list_objects``); the per-object work (one RSA unwrap + one RSA wrap + one
 server-side copy) fans out over executors via mapInPandas with only
 keys on the wire. Session keys exist transiently in executor memory —
 same exposure class as the decrypt path, same ``key_provider``
@@ -43,15 +43,13 @@ Caveats (both surfaced in the per-object report, not by crashing):
 
 from __future__ import annotations
 
-import base64
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..session import tune
-from .pipeline import IngestConfig
-from ..functions.localrel import local_rows_df
-from .decrypt import _unwrap_session_key
+from .crypto import ENVELOPE_FIELDS, EnvelopeEncryptor
+from .pipeline import IngestConfig, list_objects, s3_client
 
 _ROT_SCHEMA = "s3_key string, rotated boolean, status string"
 
@@ -59,7 +57,6 @@ _ROT_SCHEMA = "s3_key string, rotated boolean, status string"
 # upload_part_copy path (parameterized so the drill can exercise it
 # without a 5 GiB fixture).
 _COPY_OBJECT_LIMIT = 5 * 1024**3
-_ENVELOPE_FIELDS = {"iv", "ciphertext", "datakeyencryptionkeyid"}
 
 
 def rotate_envelope_keys(
@@ -79,46 +76,19 @@ def rotate_envelope_keys(
     skipped, as are stray objects without envelope metadata — see the
     module docstring). Payload bytes are untouched (server-side copy;
     multipart upload_part_copy above ``multipart_threshold``)."""
-    import boto3
-
     tune(spark)
-    client = boto3.client(
-        "s3",
-        region_name=cfg.aws_region,
-        endpoint_url=cfg.s3_endpoint_url,
-        **cfg.extra_boto_kwargs,
-    )
-    keys: list[str] = []
-    paginator = client.get_paginator("list_objects_v2")
-    for page in paginator.paginate(Bucket=cfg.s3_bucket, Prefix=cfg.s3_prefix):
-        keys.extend(o["Key"] for o in page.get("Contents", []))
-    if not keys:
+    keys_df, n_keys = list_objects(spark, cfg)
+    if not n_keys:
         return 0
-    keys_df = local_rows_df(spark, [(k,) for k in keys], "s3_key string")
-
-    bucket, region, endpoint, extra = (
-        cfg.s3_bucket,
-        cfg.aws_region,
-        cfg.s3_endpoint_url,
-        cfg.extra_boto_kwargs,
-    )
+    bucket = cfg.s3_bucket
 
     def rewrap(batches: Iterator) -> Iterator:
-        import boto3
         import pandas as pd
-        from cryptography.hazmat.primitives import hashes, serialization
-        from cryptography.hazmat.primitives.asymmetric import padding
 
-        s3 = boto3.client(
-            "s3", region_name=region, endpoint_url=endpoint, **extra
-        )
+        s3 = s3_client(cfg)
         pem = key_provider() if key_provider is not None else old_private_key_pem
-        new_pub = serialization.load_pem_public_key(new_public_key_pem)
-        oaep = padding.OAEP(
-            mgf=padding.MGF1(algorithm=hashes.SHA256()),
-            algorithm=hashes.SHA256(),
-            label=None,
-        )
+        new_key = EnvelopeEncryptor(new_public_key_pem, new_key_id)
+
         def copy_with_new_meta(key: str, size: int, meta: dict) -> None:
             if size < multipart_threshold:
                 s3.copy_object(
@@ -137,8 +107,8 @@ def rotate_envelope_keys(
             )
             parts = []
             try:
-                part_no = 1
-                for start in range(0, size, multipart_part_size):
+                starts = range(0, size, multipart_part_size)
+                for part_no, start in enumerate(starts, 1):
                     end = min(start + multipart_part_size, size) - 1
                     res = s3.upload_part_copy(
                         Bucket=bucket,
@@ -148,13 +118,8 @@ def rotate_envelope_keys(
                         CopySource={"Bucket": bucket, "Key": key},
                         CopySourceRange=f"bytes={start}-{end}",
                     )
-                    parts.append(
-                        {
-                            "PartNumber": part_no,
-                            "ETag": res["CopyPartResult"]["ETag"],
-                        }
-                    )
-                    part_no += 1
+                    etag = res["CopyPartResult"]["ETag"]
+                    parts.append({"PartNumber": part_no, "ETag": etag})
                 s3.complete_multipart_upload(
                     Bucket=bucket,
                     Key=key,
@@ -168,36 +133,22 @@ def rotate_envelope_keys(
                 raise
 
         for pdf in batches:
-            out = {"s3_key": [], "rotated": [], "status": []}
+            rows = []
             for key in pdf["s3_key"]:
                 head = s3.head_object(Bucket=bucket, Key=key)
-                meta = dict(head["Metadata"])
-                if not _ENVELOPE_FIELDS.issubset(meta):
+                meta = head["Metadata"]
+                if not set(ENVELOPE_FIELDS).issubset(meta):
                     # Stray/partial object: report, never crash the run.
-                    out["s3_key"].append(key)
-                    out["rotated"].append(False)
-                    out["status"].append("skipped_no_envelope")
-                    continue
-                if meta.get("datakeyencryptionkeyid") == new_key_id:
-                    out["s3_key"].append(key)
-                    out["rotated"].append(False)
-                    out["status"].append("already_current")
-                    continue
-                session_key = _unwrap_session_key(pem, meta["ciphertext"])
-                meta["ciphertext"] = base64.b64encode(
-                    new_pub.encrypt(session_key, oaep)
-                ).decode("ascii")
-                meta["datakeyencryptionkeyid"] = new_key_id
-                copy_with_new_meta(key, int(head["ContentLength"]), meta)
-                out["s3_key"].append(key)
-                out["rotated"].append(True)
-                out["status"].append("rotated")
-            yield pd.DataFrame(out)
+                    rows.append((key, False, "skipped_no_envelope"))
+                elif meta["datakeyencryptionkeyid"] == new_key_id:
+                    rows.append((key, False, "already_current"))
+                else:
+                    meta = new_key.rewrap(meta, pem)
+                    copy_with_new_meta(key, int(head["ContentLength"]), meta)
+                    rows.append((key, True, "rotated"))
+            yield pd.DataFrame(rows, columns=["s3_key", "rotated", "status"])
 
-    n = max(1, min(len(keys), spark.sparkContext.defaultParallelism))
-    report: DataFrame = keys_df.repartition(n).mapInPandas(
-        rewrap, schema=_ROT_SCHEMA
-    )
+    report: DataFrame = keys_df.mapInPandas(rewrap, schema=_ROT_SCHEMA)
     counts = {
         r["status"]: r["n"]
         for r in report.groupBy("status").agg(
@@ -215,7 +166,7 @@ def rotate_envelope_keys(
             "rotate_envelope_keys",
             n_rotated,
             f"bucket={cfg.s3_bucket} prefix={cfg.s3_prefix}"
-            f" new_key_id={new_key_id} objects={len(keys)}"
+            f" new_key_id={new_key_id} objects={n_keys}"
             f" skipped_no_envelope={n_skipped}",
         )
     return n_rotated

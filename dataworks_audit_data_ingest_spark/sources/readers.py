@@ -24,8 +24,9 @@ def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame
 
 
 def read_binary_dir(spark: SparkSession, src_dir: str) -> DataFrame:
-    """File-as-record reader: (path, basename, day, content) rows — the
-    reference's data model as a DataFrame (SURVEY.md §1.4)."""
+    """File-as-record reader: (path, basename, day, length, content) rows —
+    the reference's data model as a DataFrame (SURVEY.md §1.4); ``day`` is
+    the file's top-level dated directory, as in ingest."""
     from ..ingest.pipeline import scan_source
 
     return scan_source(spark, src_dir)

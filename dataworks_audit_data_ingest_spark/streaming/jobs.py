@@ -26,7 +26,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..ingest.pipeline import IngestConfig, encrypt_and_upload
+from ..ingest.pipeline import IngestConfig, encrypt_and_upload, file_columns
 # Not called here any more: both ingest sinks use the fused kernel. It stays
 # importable from this module because perfbench's traced run wraps
 # ``streaming.jobs.encrypt_files`` (perfbench/workloads.py).
@@ -120,7 +120,10 @@ def start_encrypted_ingest_stream(
     available_now: bool = True,
 ):
     """Streaming twin of ``ingest.run_ingest``: binaryFile stream →
-    compress+encrypt → per-batch metadata-bearing S3 sink.
+    compress+encrypt → per-batch metadata-bearing S3 sink. Files get their
+    ``day`` by the batch rule (``pipeline.file_columns``: the top-level
+    dated directory), so a drain uploads the objects a first ``run_ingest``
+    would.
 
     ``foreachBatch`` runs the batch pipeline's fused kernel unchanged; the
     commit log in ``checkpoint_dir`` provides the once-per-file guarantee
@@ -137,14 +140,7 @@ def start_encrypted_ingest_stream(
         .schema(binary_schema)
         .option("recursiveFileLookup", "true")
         .load(cfg.src_dir)
-        .select(
-            "path",
-            F.element_at(F.split("path", "/"), -1).alias("basename"),
-            F.expr(
-                r"TRY_TO_DATE(REGEXP_EXTRACT(path, '([^/]+)/[^/]+$', 1), 'yyyy-MM-dd')"
-            ).alias("day"),
-            "content",
-        )
+        .select(*file_columns(spark, cfg.src_dir), "content")
         .filter(F.col("day").isNotNull())
     )
 

@@ -142,10 +142,7 @@ _SLOW_FILES = {
     "test_vector_lifecycle_example.py",
     # property / fuzz drills
     "test_properties.py",
-    # heavy ingest / misc drills
-    "test_decrypt_pipeline.py",
-    "test_key_rotation.py",
-    "test_largefile.py",
+    # heavy misc drills
     "test_privacy_ladder.py",
     "test_text_pipeline.py",
     "test_graph.py",

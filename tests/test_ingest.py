@@ -362,3 +362,134 @@ def test_encrypted_stream_drain_and_resume(spark, moto_s3, rsa_keypair, tmp_path
         obj = s3.get_object(Bucket=cfg.s3_bucket, Key=key)
         assert set(obj["Metadata"]) == {"iv", "ciphertext", "datakeyencryptionkeyid"}
         assert _decrypt(priv, obj) == payload
+
+
+def test_encrypt_record_bytes_are_pinned(rsa_keypair):
+    """Under an injected rng the ciphertext and iv of ``encrypt_record`` are
+    a fixed function of the content — pinned by a digest, over sizes from
+    empty to past the transform's 8 MiB read chunk. The RSA-wrapped key is
+    randomized by OAEP and not part of the digest."""
+    import hashlib
+    import itertools
+
+    _, pub_pem = rsa_keypair
+    draws = itertools.count()
+    enc = EnvelopeEncryptor(
+        pub_pem,
+        "kid",
+        rng=lambda n: hashlib.sha256(b"rng-%d" % next(draws)).digest()[:n],
+    )
+    h = hashlib.sha256()
+    for content in (b"", b"hello world", bytes(range(256)) * 4000, b"x" * (9 << 20)):
+        rec = enc.encrypt_record(content)
+        h.update(rec.ciphertext)
+        h.update(rec.iv.encode())
+    assert h.hexdigest() == (
+        "5f3bab3fc09de48bf6a533067d56c63ac1c4815d993db6beeb5d01afdaf371c7"
+    )
+
+
+def test_s3_client_uses_configured_standard_retries(rsa_keypair):
+    """Every ingest, decrypt and rotate client comes from ``s3_client``:
+    botocore standard mode with the configured attempt count."""
+    from dataworks_audit_data_ingest_spark.ingest.pipeline import s3_client
+
+    cfg = IngestConfig(
+        src_dir="unused", s3_bucket="b", s3_prefix="p/", hsm_key_id="k",
+        rsa_public_key_pem=rsa_keypair[1], progress_file="unused", retries=7,
+        s3_endpoint_url="http://localhost:1",
+    )
+    # botocore stores the retry count as total attempts, the first included
+    assert s3_client(cfg).meta.config.retries == {
+        "mode": "standard",
+        "total_max_attempts": 8,
+    }
+
+
+@pytest.mark.parametrize("prefix", ["audit-data/", "audit", ""])
+def test_object_key_round_trip(prefix):
+    """``parse_object_key`` inverts ``object_key`` whether or not the prefix
+    ends in ``/`` (it carries its own separator, quirk 5)."""
+    from dataworks_audit_data_ingest_spark.ingest.pipeline import (
+        object_key,
+        parse_object_key,
+    )
+
+    key = object_key(prefix, "2020-10-10", "audit-data-1.json")
+    assert key == f"{prefix}2020-10-10/audit-data-1.json.gz.enc"
+    assert parse_object_key(prefix, key) == ("2020-10-10", "audit-data-1.json")
+
+
+def test_sql_day_rule_matches_driver_day_rule(spark, tmp_path):
+    """``file_columns`` (scan and stream) and ``_parse_day`` (the listing)
+    give every top-level directory name the same verdict; a nested file
+    takes its top-level day."""
+    from dataworks_audit_data_ingest_spark.ingest.pipeline import (
+        _parse_day,
+        file_columns,
+    )
+
+    root = f"file:{tmp_path}"
+    names = ["2020-10-10", "2020-1-5", "2020-02-30", "not-a-date", "0000-01-01"]
+    paths = [f"{root}/{n}/f.json" for n in names]
+    nested = {
+        f"{root}/2020-10-10/sub/f.json": date(2020, 10, 10),
+        f"{root}/not-a-date/2020-10-11/f.json": None,
+        f"{root}/top-level-file.json": None,
+    }
+    df = spark.createDataFrame([(p,) for p in paths + list(nested)], "path string")
+    cols = file_columns(spark, str(tmp_path))
+    got = dict(df.select("path", *cols).select("path", "day").collect())
+    assert {p: got[p] for p in paths} == {
+        f"{root}/{n}/f.json": _parse_day(n) for n in names
+    }
+    assert _parse_day("2020-10-10") == date(2020, 10, 10)
+    assert {p: got[p] for p in nested} == nested
+
+
+def test_stream_and_batch_upload_the_same_objects(
+    spark, moto_s3, rsa_keypair, tmp_path
+):
+    """A stream drain and a first ``run_ingest`` over one tree give the same
+    keys and payloads: a file nested in a day belongs to that day, and a
+    dated directory under a non-dated one is skipped by both."""
+    import dataclasses
+
+    from dataworks_audit_data_ingest_spark.streaming.jobs import (
+        start_encrypted_ingest_stream,
+    )
+
+    priv, pub_pem = rsa_keypair
+    src = _tree(
+        tmp_path / "src",
+        {
+            "2020-10-10/a.json": PAYLOAD_1,
+            "2020-10-10/sub/b.json": PAYLOAD_2,
+            "not-a-date/2020-10-11/c.json": b"skipped",
+            "2020-02-30/d.json": b"skipped",
+            "top.json": b"skipped",
+        },
+    )
+    batch = _cfg(src, tmp_path, moto_s3, pub_pem, bucket="parity-bucket")
+    stream = dataclasses.replace(batch, s3_prefix="stream/")
+    run_ingest(spark, batch)
+    query = start_encrypted_ingest_stream(spark, stream, str(tmp_path / "ckpt"))
+    query.awaitTermination(120)
+
+    s3 = boto3.client("s3", region_name="eu-west-2", endpoint_url=moto_s3)
+
+    def objects(prefix):
+        return {
+            key.removeprefix(prefix): _decrypt(
+                priv, s3.get_object(Bucket=batch.s3_bucket, Key=key)
+            )
+            for key in _keys(moto_s3, batch.s3_bucket)
+            if key.startswith(prefix)
+        }
+
+    want = {
+        "2020-10-10/a.json.gz.enc": PAYLOAD_1,
+        "2020-10-10/b.json.gz.enc": PAYLOAD_2,
+    }
+    assert objects("audit-data/") == want
+    assert objects("stream/") == want

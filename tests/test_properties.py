@@ -11,8 +11,11 @@ import zlib
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from dataworks_audit_data_ingest_spark.ingest.crypto import eax_decrypt, eax_encrypt
-from dataworks_audit_data_ingest_spark.ingest.largefile import _CompressEncryptStream
+from dataworks_audit_data_ingest_spark.ingest.crypto import (
+    _CompressEncryptStream,
+    eax_decrypt,
+    eax_encrypt,
+)
 
 KEY = st.binary(min_size=16, max_size=16)
 NONCE = st.binary(min_size=16, max_size=16)
