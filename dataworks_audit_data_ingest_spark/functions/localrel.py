@@ -37,20 +37,39 @@ _MAX_LITERAL_ROWS = 200
 # mirroring createDataFrame's construction-time checks: a wrong-typed
 # value must NOT reach lit().cast() — the cast error would only surface
 # at action time, and on an ANSI-off session would become a silent NULL
-# (a NULLed fold-manifest dir or audit row, with no error anywhere).
-# A value outside this table (or a field type not listed) falls back to
-# createDataFrame, which raises its usual verifier error.
+# (a NULLed fold-manifest dir or audit row, with no error anywhere) or a
+# wrapped integer (``2**40`` cast to ``int`` is 0). A value outside this
+# table, outside its type's range, or of a field type not listed falls
+# back to createDataFrame, which raises its usual verifier error.
+# TimestampNTZType is not listed: ``lit(datetime)`` is a zoned timestamp,
+# so its cast to NTZ shifts the wall clock by the session time zone.
 _SCALAR_OK = (
     (T.StringType, str),
     (T.BooleanType, bool),
     ((T.ByteType, T.ShortType, T.IntegerType, T.LongType), int),
     ((T.FloatType, T.DoubleType), (int, float)),
-    (T.DecimalType, (int, _decimal.Decimal)),
+    (T.DecimalType, _decimal.Decimal),
     (T.TimestampType, _dt.datetime),
-    (T.TimestampNTZType, _dt.datetime),
     (T.DateType, (_dt.date,)),
     (T.BinaryType, (bytes, bytearray)),
 )
+
+_INT_BITS = {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32, T.LongType: 64}
+
+
+def _in_range(v, dtype) -> bool:
+    """Whether ``v`` is held exactly by ``dtype``: integrals within their
+    width, decimals within precision and scale without rounding."""
+    bits = _INT_BITS.get(type(dtype))
+    if bits is not None:
+        return -(1 << (bits - 1)) <= v < 1 << (bits - 1)
+    if isinstance(dtype, T.DecimalType):
+        if not v.is_finite():
+            return False
+        _, digits, exp = v.as_tuple()
+        integral_digits = len(digits) + exp
+        return exp >= -dtype.scale and integral_digits <= dtype.precision - dtype.scale
+    return True
 
 
 def _value_ok(v, dtype) -> bool:
@@ -61,7 +80,7 @@ def _value_ok(v, dtype) -> bool:
             # bool is an int subclass; only BooleanType may take it
             if isinstance(v, bool) and not isinstance(dtype, T.BooleanType):
                 return False
-            return isinstance(v, pys)
+            return isinstance(v, pys) and _in_range(v, dtype)
     return False  # non-scalar field types take the general slow path
 
 
@@ -71,18 +90,21 @@ def local_rows_df(
     schema: StructType | str,
 ) -> DataFrame:
     """``createDataFrame(rows, schema)`` semantics, as a pure-JVM plan
-    when the row set is small enough (see module docstring). Rows are
-    positional (tuples or Rows); values must match the schema's arity."""
+    when the row set is small enough (see module docstring). Tuples and
+    Rows are positional and must match the schema's arity; dict rows are
+    matched by name through ``createDataFrame``."""
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     rows = list(rows)
     if not rows or len(rows) > _MAX_LITERAL_ROWS:
         return spark.createDataFrame(rows, schema)
-    # Fall back (and let createDataFrame raise its standard errors) on
-    # arity mismatch or any value the scalar-type table does not bless —
-    # the literal path must never silently truncate or NULL a row.
+    # Fall back (and let createDataFrame raise its standard errors) on a
+    # row that is not positional (a dict maps fields by name), an arity
+    # mismatch or any value the scalar-type table does not bless — the
+    # literal path must never silently truncate, wrap or NULL a row.
     n = len(schema.fields)
-    if any(len(row) != n for row in rows) or any(
+    positional = all(isinstance(row, (tuple, list)) and len(row) == n for row in rows)
+    if not positional or any(
         not _value_ok(row[i], f.dataType)
         for row in rows
         for i, f in enumerate(schema.fields)

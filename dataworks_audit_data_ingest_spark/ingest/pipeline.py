@@ -2,11 +2,14 @@
 (`audit_data_ingest.py:36-68` and the CLI block `:235-313`).
 
 Shape (SURVEY.md §3.4): top-level listing of the source on the driver,
-keeping ``yyyy-MM-dd`` directories strictly after the watermark → per day,
-in ascending order, one ``binaryFile`` scan of that directory alone →
-fused compress+encrypt+upload (Arrow-batched ``mapInPandas``, per-object
-envelope metadata) → one Spark job per day → per-day all-or-nothing
-watermark commit.
+keeping ``yyyy-MM-dd`` directories strictly after the watermark → one
+``binaryFile`` scan of all those directories together (``day`` and
+``basename`` by ``file_columns``, the stream's projection) → fused
+compress+encrypt+upload (Arrow-batched ``mapInPandas``, per-object
+envelope metadata) → ONE Spark job per run, however many days are new →
+the watermark committed day by day, in ascending order, from the audit
+rows. A run is all-or-nothing: a failed job commits none of its days, and
+the next run uploads them again to the same keys.
 
 This module also owns the S3 side of the object contract, once: the client
 (``s3_client``), the key layout (``object_key`` / ``parse_object_key``),
@@ -22,7 +25,9 @@ What the reference hand-rolled and Spark absorbs (SURVEY.md §4):
   executors read source splits directly
 - ThreadPoolExecutor fan-out (`:82-90`) → task scheduling, one task per
   input partition
-- all-or-nothing day verdict (`:96-104`) → Spark job success/failure
+- per-day loop with an all-or-nothing day verdict (`:36-68`, `:96-104`) →
+  one job for all new days, whose success or failure is the verdict of the
+  whole run
 """
 
 from __future__ import annotations
@@ -168,6 +173,14 @@ def _upload(df: DataFrame, cfg: IngestConfig, source: str) -> DataFrame:
         client = s3_client(cfg)
         enc = EnvelopeEncryptor(cfg.rsa_public_key_pem, cfg.hsm_key_id)
         for pdf in it:
+            # a NULL day has no key: astype(str) would put it under "None/"
+            missing = pdf["day"].isna()
+            if missing.any():
+                raise ValueError(
+                    f"{int(missing.sum())} row(s) have no day, e.g. "
+                    f"{pdf['basename'][missing].iloc[0]!r}; nothing of this "
+                    "batch was uploaded"
+                )
             rows = [
                 _put_envelope(client, enc, cfg, day, basename, src)
                 for day, basename, src in zip(
@@ -191,36 +204,40 @@ def _hadoop_root(spark: SparkSession, src_dir: str):
     return fs, fs.makeQualified(root)
 
 
-def _basename() -> Column:
-    return F.element_at(F.split("path", "/"), -1).alias("basename")
-
-
 def file_columns(spark: SparkSession, src_dir: str) -> list[Column]:
-    """``basename`` and ``day`` of a ``binaryFile`` read of ``src_dir``
-    (batch or stream), from its ``path``. ``day`` is the file's top-level
-    directory when that directory passes ``_parse_day`` (the rule of
-    ``list_new_days``), else NULL: nested files belong to their top-level
-    day, and a dated directory under a non-dated one has no day."""
+    """``basename`` and ``day`` of a ``binaryFile`` read of ``src_dir`` or
+    of directories under it (batch or stream), from its ``path``. ``day``
+    is the file's top-level directory when that directory passes
+    ``_parse_day`` (the rule of ``list_new_days``), else NULL: nested files
+    belong to their top-level day, and a dated directory under a non-dated
+    one has no day."""
     _, root = _hadoop_root(spark, src_dir)
     quoted = spark._jvm.java.util.regex.Pattern.quote(root.toString().rstrip("/") + "/")
     top = F.regexp_extract("path", f"^{quoted}([^/]+)/", 1)
     day = F.when(top.rlike(f"^{_DAY_NAME}$"), F.try_to_date(top, "yyyy-MM-dd"))
-    return [_basename(), day.alias("day")]
+    basename = F.element_at(F.split("path", "/"), -1)
+    return [basename.alias("basename"), day.alias("day")]
+
+
+def _scan(spark: SparkSession, src_dir: str, dirs: str | list[str]) -> DataFrame:
+    """One ``binaryFile`` read of ``dirs`` (directories of ``src_dir`` or
+    ``src_dir`` itself), nested files included, as ``(path, basename, day,
+    length, content)``, ``day`` per :func:`file_columns`."""
+    df = (
+        spark.read.format("binaryFile")
+        .option("recursiveFileLookup", "true")
+        .load(dirs)
+    )
+    return df.select("path", *file_columns(spark, src_dir), "length", "content")
 
 
 def scan_source(spark: SparkSession, src_dir: str) -> DataFrame:
     """Whole-tree ``binaryFile`` scan as ``(path, basename, day, length,
     content)``, ``day`` per :func:`file_columns`, for the large-file listing
-    and ``sources.read_binary_dir``. ``run_ingest`` does not use it: it
-    lists the top level first (``list_new_days``) and scans only the new
-    days (``scan_day``)."""
+    and ``sources.read_binary_dir``. ``run_ingest`` lists the top level
+    first (``list_new_days``) and scans only the new days."""
     tune(spark)
-    df = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .load(src_dir)
-    )
-    return df.select("path", *file_columns(spark, src_dir), "length", "content")
+    return _scan(spark, src_dir, src_dir)
 
 
 def encrypt_files(df: DataFrame, pem: bytes, key_id: str) -> DataFrame:
@@ -267,8 +284,9 @@ def encrypt_and_upload(df: DataFrame, cfg: IngestConfig) -> DataFrame:
     locally that transfer, not crypto, was the ceiling (PERF.md). Fusing
     keeps ciphertext inside the task that produced it — only small audit
     rows (day, basename, key, size) cross back. An action on the returned
-    frame drives the upload; all-or-nothing day semantics are unchanged (any
-    task failure fails the job before the watermark commit).
+    frame drives the upload; any task failure fails the job before the
+    watermark commit. A row with a NULL ``day`` has no key: its batch
+    raises ``ValueError`` before that row is put.
     """
     return _upload(df, cfg, "content")
 
@@ -351,26 +369,24 @@ def _parse_day(name: str) -> date | None:
         return None
 
 
-def scan_day(spark: SparkSession, day: date, day_dir: str) -> DataFrame:
-    """The files of one day directory, nested ones included, as the fused
-    kernel's ``(day, basename, content)`` records. ``day`` is a literal from
-    the directory name, so the scan reads only this directory."""
-    return (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .load(day_dir)
-        .select(F.lit(day.isoformat()).alias("day"), _basename(), "content")
-    )
-
-
 def run_ingest(spark: SparkSession, cfg: IngestConfig) -> list[date]:
-    """R13: the per-day driver loop. Days are processed in ascending order;
-    each day is ONE Spark job (the fused kernel plus a ``collect`` of its
-    audit rows); the watermark is committed only after the whole day
-    succeeded — any task failure fails the job and the day is retried
-    wholesale on the next run (at-least-once over an idempotent overwrite
-    sink, `audit_data_ingest.py:49-68,96-104`). A day directory that holds
-    no files uploads nothing and is not committed.
+    """R13: the reference's per-day driver loop (`audit_data_ingest.py:36-68`)
+    as ONE Spark job per run: every new day's directory in one ``binaryFile``
+    scan, the fused kernel over all of it, one ``collect`` of the audit rows.
+    The driver then walks the new days in ascending order and commits the
+    watermark after each day that uploaded at least one object; a day
+    directory that holds no files uploads nothing and is not committed.
+    Above ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)
+    new days, Spark lists their directories in one more job, JVM-only, at
+    the scan's construction.
+
+    Failure is all-or-nothing per run: any task failure fails the one job
+    before any commit, and the next run uploads every day of this run again,
+    to the same keys (at-least-once over an idempotent overwrite sink,
+    `:49-68,96-104`). Deviation from the reference: it commits each day as
+    that day finishes, so a failure on day N keeps days before N; here it
+    keeps none of the run. With one new day per run, the steady 12-hourly
+    state, the two are the same.
 
     Returns the list of committed days.
     """
@@ -382,24 +398,28 @@ def run_ingest(spark: SparkSession, cfg: IngestConfig) -> list[date]:
         return []
 
     # NB on small-file parallelism: binaryFile packing is governed by
-    # maxPartitionBytes AND openCostInBytes (default 4 MB per file), so a day
+    # maxPartitionBytes AND openCostInBytes (default 4 MB per file), so a run
     # of small files already fans out to ~max(1, bytes/(size+4MB)·cores)
     # tasks — measured 29 tasks for 200×1 MB files at defaults. Shrinking
     # maxPartitionBytes below default only added per-task overhead
     # (measured 38→26 MB/s); the defaults are kept deliberately.
+    files = _scan(spark, cfg.src_dir, [day_dir for _, day_dir in days])
+    audit: dict[str, list] = {}
+    for row in encrypt_and_upload(files, cfg).collect():
+        audit.setdefault(row.day, []).append(row)
+    # reaching here means every task of the run's job succeeded
     committed: list[date] = []
-    for day, day_dir in days:
-        audit = encrypt_and_upload(scan_day(spark, day, day_dir), cfg).collect()
-        if not audit:
+    for day, _ in days:
+        rows = audit.get(day.isoformat())
+        if not rows:
             logger.info("day %s holds no files; not committed", day)
             continue
-        # reaching here means every task of the day's job succeeded
         update_progress_file(cfg.progress_file, day)
         committed.append(day)
         logger.info(
             "committed day %s (%d objects, %d ciphertext bytes)",
             day,
-            len(audit),
-            sum(r.n_bytes for r in audit),
+            len(rows),
+            sum(r.n_bytes for r in rows),
         )
     return committed

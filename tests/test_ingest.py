@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import base64
 import zlib
-from datetime import date
+from datetime import date, timedelta
 
 import boto3
 import pytest
@@ -307,9 +307,23 @@ def test_empty_newest_day_is_not_committed(spark, moto_s3, rsa_keypair, tmp_path
     assert _keys(moto_s3, cfg.s3_bucket) == ["audit-data/2020-10-09/a.json.gz.enc"]
 
 
-def test_one_spark_job_per_committed_day(spark, moto_s3, rsa_keypair, tmp_path):
-    """The listing runs on the driver and each day is one job: the fused
-    kernel plus the collect of its audit rows."""
+def _jobs_in_group(spark, group, run) -> int:
+    """The number of Spark jobs ``run()`` starts, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_one_spark_job_per_run(spark, moto_s3, rsa_keypair, tmp_path):
+    """The listing runs on the driver and a run is one job, however many
+    days are new: one scan of the new days, the fused kernel and the
+    collect of its audit rows. A resume with nothing new runs no job."""
     _, pub_pem = rsa_keypair
     src = _tree(
         tmp_path / "src",
@@ -320,16 +334,78 @@ def test_one_spark_job_per_committed_day(spark, moto_s3, rsa_keypair, tmp_path):
         },
     )
     cfg = _cfg(src, tmp_path, moto_s3, pub_pem, bucket="jobs-bucket")
-    sc = spark.sparkContext
-    sc.setJobGroup("ingest-job-count", "run_ingest job count")
+    committed = []
+    assert _jobs_in_group(
+        spark, "ingest-run", lambda: committed.extend(run_ingest(spark, cfg))
+    ) == 1
+    assert committed == [date(2020, 10, d) for d in (9, 10, 11)]
+    assert len(_keys(moto_s3, cfg.s3_bucket)) == 9
+    assert _jobs_in_group(spark, "ingest-resume", lambda: run_ingest(spark, cfg)) == 0
+
+
+def test_failed_run_commits_no_day_and_retry_commits_all(
+    spark, moto_s3, rsa_keypair, tmp_path
+):
+    """A run is all-or-nothing: a file ``binaryFile`` cannot read in the
+    newest of three days fails the one job, so no day is committed, not
+    even the two before it. Once the file is gone, the retry commits all
+    three days."""
+    priv, pub_pem = rsa_keypair
+    days = ["2020-10-09", "2020-10-10", "2020-10-11"]
+    src = _tree(tmp_path / "src", {f"{d}/a.json": PAYLOAD_1 for d in days})
+    big = src / days[-1] / "big.json"
+    big.write_bytes(b"x" * 1000)
+    cfg = _cfg(src, tmp_path, moto_s3, pub_pem, bucket="all-or-nothing-bucket")
+    spark.conf.set("spark.sql.sources.binaryFile.maxLength", "500")
     try:
-        committed = run_ingest(spark, cfg)
+        with pytest.raises(Exception, match="FAILED_READ_FILE"):
+            run_ingest(spark, cfg)
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(committed) == 3
-    # job-start events reach the status store through the async listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup("ingest-job-count")) == 3
+        spark.conf.unset("spark.sql.sources.binaryFile.maxLength")
+    assert not (tmp_path / "progress.txt").exists()
+
+    big.unlink()
+    assert run_ingest(spark, cfg) == [date.fromisoformat(d) for d in days]
+    assert find_start_date(cfg.progress_file) == date(2020, 10, 11)
+    keys = [f"audit-data/{d}/a.json.gz.enc" for d in days]
+    assert _keys(moto_s3, cfg.s3_bucket) == keys
+    s3 = boto3.client("s3", region_name="eu-west-2", endpoint_url=moto_s3)
+    for key in keys:
+        assert _decrypt(priv, s3.get_object(Bucket=cfg.s3_bucket, Key=key)) == PAYLOAD_1
+
+
+def test_more_new_days_than_the_parallel_listing_threshold(
+    spark, moto_s3, rsa_keypair, tmp_path
+):
+    """Above ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+    (32) roots, the one scan lists its day directories in a Spark job;
+    every day still lands under its own key and is committed in order."""
+    _, pub_pem = rsa_keypair
+    days = [date(2020, 1, 1) + timedelta(days=k) for k in range(40)]
+    src = _tree(tmp_path / "src", {f"{d}/{d}.json": PAYLOAD_2 for d in days})
+    cfg = _cfg(src, tmp_path, moto_s3, pub_pem, bucket="many-days-bucket")
+    assert run_ingest(spark, cfg) == days
+    assert find_start_date(cfg.progress_file) == days[-1]
+    assert _keys(moto_s3, cfg.s3_bucket) == [
+        f"audit-data/{d}/{d}.json.gz.enc" for d in days
+    ]
+
+
+@pytest.mark.parametrize("day_type", ["date", "string"])
+def test_null_day_is_never_uploaded(spark, moto_s3, rsa_keypair, tmp_path, day_type):
+    """A row without a day has no key: the action raises before any PUT,
+    where ``astype(str)`` would have named the object ``None/f.json``."""
+    from dataworks_audit_data_ingest_spark.ingest.pipeline import encrypt_and_upload
+
+    _, pub_pem = rsa_keypair
+    cfg = _cfg(tmp_path, tmp_path, moto_s3, pub_pem, bucket=f"null-day-{day_type}")
+    rows = spark.createDataFrame(
+        [(None, "f.json", PAYLOAD_1)],
+        f"day {day_type}, basename string, content binary",
+    )
+    with pytest.raises(Exception, match="ValueError: 1 row"):
+        encrypt_and_upload(rows, cfg).collect()
+    assert _keys(moto_s3, cfg.s3_bucket) == []
 
 
 def test_encrypted_stream_drain_and_resume(spark, moto_s3, rsa_keypair, tmp_path):

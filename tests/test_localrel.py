@@ -6,6 +6,7 @@ literals). These tests pin value/schema equivalence and the fallbacks."""
 from __future__ import annotations
 
 import datetime
+import decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -121,3 +122,72 @@ def test_wrong_type_never_silently_nulls_even_ansi_off(spark):
             local_rows_df(spark, [("abc",)], "i bigint").collect()
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+def _outcome(build):
+    """``("ok", rows)`` or ``("err", exception class)`` of building and
+    collecting a frame — errors at construction and at action alike."""
+    try:
+        return "ok", _sorted_rows(build())
+    except Exception as e:  # noqa: BLE001 — the class is the outcome
+        return "err", type(e).__name__
+
+
+def _same_as_createDataFrame(spark, rows, ddl, confs=None):
+    """Under ANSI on and off (plus ``confs``), ``local_rows_df`` gives what
+    ``createDataFrame`` gives: the same rows, or the same error class."""
+    for ansi in ("true", "false"):
+        settings = {"spark.sql.ansi.enabled": ansi, **(confs or {})}
+        prev = {k: spark.conf.get(k) for k in settings}
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        try:
+            want = _outcome(lambda: spark.createDataFrame(rows, ddl))
+            got = _outcome(lambda: local_rows_df(spark, rows, ddl))
+        finally:
+            for k, v in prev.items():
+                spark.conf.set(k, v)
+        assert got == want, (ansi, got, want)
+
+
+@pytest.mark.parametrize(
+    "value, ddl",
+    [(2**40, "i int"), (300, "b tinyint"), (-(2**15) - 1, "s smallint"),
+     (2**63, "l bigint")],
+)
+def test_out_of_range_integral_is_never_wrapped(spark, value, ddl):
+    """ANSI off, the literal cast wraps: ``2**40`` as ``int`` read 0."""
+    _same_as_createDataFrame(spark, [(value,)], ddl)
+
+
+@pytest.mark.parametrize(
+    "value",
+    [decimal.Decimal("123.456"), decimal.Decimal("100"), decimal.Decimal("1.005"),
+     decimal.Decimal("NaN"), 12],
+)
+def test_decimal_outside_precision_is_never_nulled(spark, value):
+    """ANSI off, the literal cast NULLs a decimal over precision, where
+    createDataFrame raises; an ``int`` is not a decimal to it either."""
+    _same_as_createDataFrame(spark, [(value,)], "d decimal(4,2)")
+
+
+def test_decimal_within_precision_stays_a_literal(spark):
+    rows = [(decimal.Decimal("12.34"),), (decimal.Decimal("-0.5"),)]
+    _same_as_createDataFrame(spark, rows, "d decimal(4,2)")
+    plan = local_rows_df(spark, rows, "d decimal(4,2)")._jdf.queryExecution()
+    assert "ExistingRDD" not in plan.executedPlan().toString()
+
+
+def test_timestamp_ntz_keeps_its_wall_clock(spark):
+    """``lit(datetime)`` is a zoned timestamp: cast to NTZ it moved by the
+    session time zone's offset."""
+    rows = [(datetime.datetime(2020, 1, 1, 12, 0),)]
+    _same_as_createDataFrame(
+        spark, rows, "t timestamp_ntz", {"spark.sql.session.timeZone": "America/New_York"}
+    )
+
+
+def test_dict_rows_match_fields_by_name(spark):
+    """A dict row used to raise ``KeyError(0)`` on the literal path."""
+    rows = [{"b": "x", "a": 1}, {"a": 2, "b": "y"}]
+    _same_as_createDataFrame(spark, rows, "a int, b string")
