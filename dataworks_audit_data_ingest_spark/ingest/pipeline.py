@@ -23,8 +23,12 @@ What the reference hand-rolled and Spark absorbs (SURVEY.md §4):
   (``list_new_days``); only the new days' directories are scanned
 - `copyToLocal` staging + cleanup (`:153-166`, `:207-210`) → eliminated;
   executors read source splits directly
-- ThreadPoolExecutor fan-out (`:82-90`) → task scheduling, one task per
-  input partition
+- ThreadPoolExecutor fan-out (`:82-90`) → split in two: Spark tasks
+  follow bytes (``encrypt_and_upload`` coalesces its input by Spark's
+  core-aware split rule over Catalyst's size estimate, pricing a Python
+  task's fixed cost where Spark prices a file open), and inside each task
+  a thread pool as wide as the S3 client's connection pool overlaps the
+  PUTs, as the reference's per-file pool did
 - per-day loop with an all-or-nothing day verdict (`:36-68`, `:96-104`) →
   one job for all new days, whose success or failure is the verdict of the
   whole run
@@ -36,6 +40,8 @@ import base64
 import io
 import logging
 import re
+from collections import deque
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import date
 
@@ -43,7 +49,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.localrel import local_rows_df
-from ..session import tune
+from ..session import max_partition_bytes, tune
 from .crypto import EnvelopeEncryptor
 from .watermark import find_start_date, update_progress_file
 
@@ -163,31 +169,69 @@ def _put_envelope(client, enc: EnvelopeEncryptor, cfg: IngestConfig,
     return day, basename, key, stream.bytes_out
 
 
+def _overlap(pool: ThreadPoolExecutor, fn, rows, sizes, width: int, budget: int):
+    """``fn`` over ``rows`` on ``pool``, results in order, with at most
+    ``width`` rows and ``budget`` bytes (by ``sizes``) in flight; a row
+    larger than ``budget`` runs alone. Each call of ``fn`` holds copies of
+    its row's bytes, so the budget bounds a task's memory however wide the
+    pool is."""
+    flight: deque = deque()
+    held = 0
+    for row, n in zip(rows, sizes):
+        while flight and (len(flight) >= width or held + n > budget):
+            fut, m = flight.popleft()
+            yield fut.result()
+            held -= m
+        flight.append((pool.submit(fn, row), n))
+        held += n
+    for fut, _ in flight:
+        yield fut.result()
+
+
 def _upload(df: DataFrame, cfg: IngestConfig, source: str) -> DataFrame:
     """``mapInPandas`` of :func:`_put_envelope` over ``(day, basename,
-    source)`` rows: one S3 client and one encryptor per task, audit rows out."""
+    source)`` rows: one S3 client and one encryptor per task, audit rows out.
+    Content rows run on a thread pool as wide as the client's connection
+    pool, so PUT latency overlaps (and compression: zlib releases the GIL),
+    with at most ``maxPartitionBytes`` of content in flight; path rows keep
+    one object in flight per task."""
+    budget = max_partition_bytes(df.sparkSession)
 
     def batches(it):
         import pandas as pd
 
         client = s3_client(cfg)
         enc = EnvelopeEncryptor(cfg.rsa_public_key_pem, cfg.hsm_key_id)
-        for pdf in it:
-            # a NULL day has no key: astype(str) would put it under "None/"
-            missing = pdf["day"].isna()
-            if missing.any():
-                raise ValueError(
-                    f"{int(missing.sum())} row(s) have no day, e.g. "
-                    f"{pdf['basename'][missing].iloc[0]!r}; nothing of this "
-                    "batch was uploaded"
+        width = client.meta.config.max_pool_connections if source == "content" else 1
+
+        def put(row):
+            return _put_envelope(client, enc, cfg, *row)
+
+        pool = ThreadPoolExecutor(width)
+        try:
+            for pdf in it:
+                # a NULL day has no key: astype(str) would put it under "None/"
+                missing = pdf["day"].isna()
+                if missing.any():
+                    raise ValueError(
+                        f"{int(missing.sum())} row(s) have no day, e.g. "
+                        f"{pdf['basename'][missing].iloc[0]!r}; nothing of this "
+                        "batch was uploaded"
+                    )
+                rows = _overlap(
+                    pool,
+                    put,
+                    zip(pdf["day"].astype(str), pdf["basename"], pdf[source]),
+                    map(len, pdf[source]),
+                    width,
+                    budget,
                 )
-            rows = [
-                _put_envelope(client, enc, cfg, day, basename, src)
-                for day, basename, src in zip(
-                    pdf["day"].astype(str), pdf["basename"], pdf[source]
+                yield pd.DataFrame(
+                    list(rows), columns=["day", "basename", "s3_key", "n_bytes"]
                 )
-            ]
-            yield pd.DataFrame(rows, columns=["day", "basename", "s3_key", "n_bytes"])
+        finally:
+            # a failed PUT fails the task: start none of the batch's others
+            pool.shutdown(cancel_futures=True)
 
     # guide §4: ship only the three columns the kernel reads
     return df.select("day", "basename", source).mapInPandas(
@@ -274,10 +318,49 @@ def encrypt_files(df: DataFrame, pem: bytes, key_id: str) -> DataFrame:
     )
 
 
+# The bytes a Python task's fixed cost is worth: a fresh worker spends
+# about 1 s of CPU on its imports and each task 0.2-0.3 s more (PERF.md
+# "Ingest anchor"), while the kernel runs 23-28 MB/s per core (perfbench
+# ``crypto.mb_s_1core``, 4-vCPU host). Spark's split rule prices a file
+# open at ``openCostInBytes`` (4 MB); splitting this kernel that fine
+# forks workers that cost more than the bytes they take (PERF.md "Tasks
+# follow bytes": a 12 MiB stream drain in 3 tasks, not 1, cost perfbench
+# ``ingest`` 10.6% of ``wall_s``).
+_TASK_COST_BYTES = 32 << 20
+
+
+def _by_bytes(df: DataFrame) -> DataFrame:
+    """``df`` coalesced to ``ceil(size / split)`` partitions by Spark's
+    core-aware file split rule, ``split = min(maxPartitionBytes,
+    max(cost, size / cores))``, with a Python task's fixed cost
+    (``_TASK_COST_BYTES``) as ``cost`` where Spark charges each file's open
+    cost: a run of up to ``cost`` bytes is one task, and a run of more
+    than ``cores × cost`` keeps every core busy. The size is Catalyst's
+    ``sizeInBytes`` estimate of the plan (no job runs, and a file source
+    is not listed again). ``coalesce`` never adds partitions and merges by
+    count and locality, not bytes, so a task holds ``split`` on average,
+    not at most."""
+    spark = df.sparkSession
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    cores = spark._jsparkSession.leafNodeDefaultParallelism()
+    split = min(max_partition_bytes(spark), max(_TASK_COST_BYTES, -(-size // cores)))
+    n = max(1, -(-size // split))
+    # An unknown size (Long.MaxValue, e.g. a Python data source; projections
+    # scale it) asks for more partitions than coalesce takes: merge nothing.
+    return df.coalesce(n) if n < 2**31 else df
+
+
 def encrypt_and_upload(df: DataFrame, cfg: IngestConfig) -> DataFrame:
     """Fused R4+R5+R6+R11: compress+encrypt+upload in ONE Python stage.
     Per-object metadata is outside DataFrameWriter's model, so the S3 sink
     is Python: one boto3 client per task (``s3_client``).
+
+    Tasks follow bytes, not files: ``binaryFile`` charges each file 4 MB of
+    open cost, so a few hundred small files would split into several
+    tasks, each paying a Python worker's fixed cost for little data. The
+    input is coalesced by the split rule of :func:`_by_bytes` (its size
+    estimate over cores, a Python task's cost in place of a file's), and
+    each task overlaps its PUTs on a thread pool (R7).
 
     The composable two-stage form (``encrypt_files`` → a separate sink)
     round-trips every ciphertext byte Python→JVM→Python through Arrow; measured
@@ -288,7 +371,7 @@ def encrypt_and_upload(df: DataFrame, cfg: IngestConfig) -> DataFrame:
     watermark commit. A row with a NULL ``day`` has no key: its batch
     raises ``ValueError`` before that row is put.
     """
-    return _upload(df, cfg, "content")
+    return _upload(_by_bytes(df), cfg, "content")
 
 
 def list_files(spark: SparkSession, src_dir: str) -> DataFrame:
@@ -397,12 +480,11 @@ def run_ingest(spark: SparkSession, cfg: IngestConfig) -> list[date]:
         logger.info("nothing newer than %s under %s", watermark, cfg.src_dir)
         return []
 
-    # NB on small-file parallelism: binaryFile packing is governed by
-    # maxPartitionBytes AND openCostInBytes (default 4 MB per file), so a run
-    # of small files already fans out to ~max(1, bytes/(size+4MB)·cores)
-    # tasks — measured 29 tasks for 200×1 MB files at defaults. Shrinking
-    # maxPartitionBytes below default only added per-task overhead
-    # (measured 38→26 MB/s); the defaults are kept deliberately.
+    # Task count follows bytes: encrypt_and_upload coalesces the scan by
+    # Spark's core-aware split rule with a Python task's cost in place of
+    # the per-file open cost (a run of small files is one task; a larger
+    # one still spreads over every core), and each task overlaps its PUTs
+    # on a thread pool.
     files = _scan(spark, cfg.src_dir, [day_dir for _, day_dir in days])
     audit: dict[str, list] = {}
     for row in encrypt_and_upload(files, cfg).collect():

@@ -63,33 +63,30 @@ def tune(spark: SparkSession) -> SparkSession:
     trip, and ``table()`` calls tune() on every load — at ~40 table loads
     per bench pass the re-pinning was measurable driver latency
     (optimization round 12, guide §5 "the driver should do almost no
-    work"). Callers that deliberately change a session conf afterwards
-    (tests do, temporarily) own the restore, exactly as before.
+    work"). Each conf is tried once: one this deployment refuses
+    (restricted or Connect sessions) is not retried on the next load, and
+    a caller's deliberate later change of a conf (tests do, temporarily)
+    stays owned by the caller, who restores it.
     """
     if getattr(spark, "_dwadi_tuned", False):
         return spark
-    # Per-conf success tracking (ADVICE round 13): only confs that have
-    # never been applied to THIS session are attempted, so a failed key
-    # (restricted/Connect deployment) is retried on the next load without
-    # re-pinning the ones that already took — a caller's deliberate
-    # temporary conf change between loads stays owned by the caller,
-    # exactly as the docstring promises.
-    applied: set[str] = getattr(spark, "_dwadi_tuned_keys", set())
     for k, v in _RUNTIME_CONF.items():
-        if k in applied:
-            continue
         try:
             spark.conf.set(k, v)
-            applied.add(k)
         except Exception:
             # Conf not settable at runtime in this deployment — keep
             # going; individual loaders have fallbacks where it matters.
             pass
-    spark._dwadi_tuned_keys = applied
     _ship_package(spark)
-    if len(applied) == len(_RUNTIME_CONF):
-        spark._dwadi_tuned = True
+    spark._dwadi_tuned = True
     return spark
+
+
+def max_partition_bytes(spark: SparkSession) -> int:
+    """``spark.sql.files.maxPartitionBytes`` in bytes, read through the
+    session's own size parser (every suffix Spark accepts, e.g. ``1t``),
+    so it always agrees with the split size the scans use."""
+    return int(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
 
 
 def default_parallelism() -> int:
@@ -133,7 +130,8 @@ CLUSTER_SUBMIT_CONF = {
     # ~160k partitions; AQE coalesces the small tail at runtime.
     "spark.sql.shuffle.partitions": "160000",
     # scan split sizing: default 128 MB splits are right for large parquet;
-    # openCostInBytes packs small files ~25-30 per task (measured, PERF.md)
+    # ingest's encrypt+upload kernel caps its tasks at the same size
+    # (ingest/pipeline.py::_by_bytes), with no per-file open cost
     "spark.sql.files.maxPartitionBytes": "134217728",
     # dims up to 256 MB broadcast (region/nation/supplier/part fit easily)
     "spark.sql.autoBroadcastJoinThreshold": "268435456",

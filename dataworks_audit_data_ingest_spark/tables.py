@@ -25,7 +25,7 @@ import stat
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .session import tune
+from .session import max_partition_bytes, tune
 
 TABLE_NAMES = (
     "region",
@@ -110,11 +110,12 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # doubled scheduling overhead, A/B'd per user) partitions so
 # that heavy per-row work parallelizes — but ONLY when the input genuinely
 # cannot be split that wide: the gate estimates the scan's natural split
-# count from the local fixture directory's on-disk bytes (cached per dir;
-# a non-local path, or enough bytes to fill cores×maxPartitionBytes splits,
-# disables the spread). On a real cluster the inputs are many multi-row-group
-# files, the gate sees a non-local path, and spread() is the identity — the
-# partial aggregation/explode stays fused with the scan exactly as before,
+# count from the local fixture directory's on-disk bytes (cached per dir,
+# core count and split size; a non-local path, or enough bytes to fill
+# cores×maxPartitionBytes splits, disables the spread). On a real cluster
+# the inputs are many multi-row-group files, the gate sees a non-local
+# path, and spread() is the identity — the partial aggregation/explode
+# stays fused with the scan exactly as before,
 # which is the right plan at 100 TB. Nothing here is tuned to local[32]:
 # the target derives from defaultParallelism, so the driver's lower-core
 # bench re-run scales the spread down with it.
@@ -125,7 +126,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # and is retry-safe by construction (SPARK-38388).
 # ---------------------------------------------------------------------------
 
-_SPREAD_GATE: dict[tuple[str, int], bool] = {}
+_SPREAD_GATE: dict[tuple[str, int, int], bool] = {}
 
 
 def _local_bytes(sf_dir: str) -> int:
@@ -149,16 +150,12 @@ def spread(df: DataFrame, sf_dir: str, *keys: str, mult: int = 1) -> DataFrame:
     """
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
-    gate = _SPREAD_GATE.get((sf_dir, cores))
+    max_split = max_partition_bytes(spark)
+    gate = _SPREAD_GATE.get((sf_dir, cores, max_split))
     if gate is None:
-        raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-        units = {"k": 1024, "m": 1024**2, "g": 1024**3}
-        m = raw.strip().lower().removesuffix("b")
-        mul = units.get(m[-1:], 1)
-        max_split = int(m.rstrip("kmg") or "134217728") * mul
         total = _local_bytes(sf_dir)
         gate = 0 <= total < cores * max_split
-        _SPREAD_GATE[(sf_dir, cores)] = gate
+        _SPREAD_GATE[(sf_dir, cores, max_split)] = gate
     if not gate:
         return df
     n = cores * mult

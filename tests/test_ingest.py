@@ -172,9 +172,9 @@ def test_encryptor_deterministic_with_injected_rng(rsa_keypair):
 
 
 def test_failed_day_does_not_commit_watermark(spark, moto_s3, rsa_keypair, src_tree, tmp_path):
-    """R7/R8 parity, negative path: any task failure in a day's job fails the
-    run BEFORE the watermark commit, so the next run retries the whole day
-    (`audit_data_ingest.py:65-68,96-104`)."""
+    """R7/R8 parity, negative path: a PUT failing on the task's thread pool
+    fails the run BEFORE the watermark commit, so the next run retries the
+    whole day (`audit_data_ingest.py:65-68,96-104`)."""
     _, pub_pem = rsa_keypair
     cfg = _cfg(src_tree, tmp_path, moto_s3, pub_pem, bucket="failure-bucket")
     broken = IngestConfig(**{**cfg.__dict__, "s3_bucket": "does-not-exist"})
@@ -320,6 +320,18 @@ def _jobs_in_group(spark, group, run) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _tasks_in_group(spark, group) -> int:
+    """The number of tasks of the Spark jobs of ``group``."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    return sum(
+        st.getStageInfo(stage).numTasks
+        for job in st.getJobIdsForGroup(group)
+        for stage in st.getJobInfo(job).stageIds
+    )
+
+
 def test_one_spark_job_per_run(spark, moto_s3, rsa_keypair, tmp_path):
     """The listing runs on the driver and a run is one job, however many
     days are new: one scan of the new days, the fused kernel and the
@@ -341,6 +353,112 @@ def test_one_spark_job_per_run(spark, moto_s3, rsa_keypair, tmp_path):
     assert committed == [date(2020, 10, d) for d in (9, 10, 11)]
     assert len(_keys(moto_s3, cfg.s3_bucket)) == 9
     assert _jobs_in_group(spark, "ingest-resume", lambda: run_ingest(spark, cfg)) == 0
+
+
+def test_small_multi_day_run_is_one_task(spark, moto_s3, rsa_keypair, tmp_path):
+    """Tasks follow bytes, not files: nine small files over three days are
+    far under one task's cost in bytes, so the run's one job is one task
+    (the scan alone, at 4 MB of open cost per file, would split them over
+    several)."""
+    _, pub_pem = rsa_keypair
+    src = _tree(
+        tmp_path / "src",
+        {f"2020-10-{d:02d}/f{i}.json": PAYLOAD_1 for d in (9, 10, 11) for i in range(3)},
+    )
+    cfg = _cfg(src, tmp_path, moto_s3, pub_pem, bucket="one-task-bucket")
+    assert _jobs_in_group(spark, "ingest-one-task", lambda: run_ingest(spark, cfg)) == 1
+    assert _tasks_in_group(spark, "ingest-one-task") == 1
+    assert len(_keys(moto_s3, cfg.s3_bucket)) == 9
+
+
+def test_task_count_follows_bytes(spark, moto_s3, rsa_keypair, tmp_path):
+    """About 300 KiB of incompressible files under a 64 KiB
+    ``maxPartitionBytes`` are not merged into one task; every object
+    decrypts to its file and the watermark holds the last day."""
+    import random
+
+    priv, pub_pem = rsa_keypair
+    rng = random.Random(7)
+    days = ["2020-10-09", "2020-10-10", "2020-10-11"]
+    files = {f"{d}/f{i}.bin": rng.randbytes(25 << 10) for d in days for i in range(4)}
+    src = _tree(tmp_path / "src", files)
+    cfg = _cfg(src, tmp_path, moto_s3, pub_pem, bucket="bytes-bucket")
+    committed = []
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(64 << 10))
+    try:
+        jobs = _jobs_in_group(
+            spark, "ingest-bytes", lambda: committed.extend(run_ingest(spark, cfg))
+        )
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    assert jobs == 1
+    assert _tasks_in_group(spark, "ingest-bytes") >= 2
+    assert committed == [date.fromisoformat(d) for d in days]
+    assert find_start_date(cfg.progress_file) == date(2020, 10, 11)
+    s3 = boto3.client("s3", region_name="eu-west-2", endpoint_url=moto_s3)
+    for rel, payload in files.items():
+        day, name = rel.split("/")
+        key = f"audit-data/{day}/{name}.gz.enc"
+        assert _decrypt(priv, s3.get_object(Bucket=cfg.s3_bucket, Key=key)) == payload
+
+
+@pytest.mark.parametrize(
+    "rows, tasks",
+    [
+        (1_000, 1),  # 8 KB: one task
+        (10_000_000, 3),  # 80 MB: under cores × 32 MiB, one task per 32 MiB
+        (20_000_000, 4),  # 160 MB: one task per core, not 2 of 128 MB
+        (60_000_000, 4),  # 480 MB: 4 splits of maxPartitionBytes
+        (100_000_000, 6),  # 800 MB: ceil(800 MB / 128 MiB), not more
+    ],
+)
+def test_task_rule_is_core_aware(spark, rows, tasks):
+    """The kernel's input is coalesced to ``ceil(size / split)`` tasks with
+    ``split = min(maxPartitionBytes, max(32 MiB, size / cores))``, by
+    Catalyst's size estimate (8 bytes a row of ``range``; nothing runs):
+    a run between ``cores × 32 MiB`` and ``cores × maxPartitionBytes``
+    still gets one task per core."""
+    from dataworks_audit_data_ingest_spark.ingest.pipeline import _by_bytes
+
+    spark.conf.set("spark.sql.leafNodeDefaultParallelism", "4")  # cores
+    try:
+        df = spark.range(0, rows, numPartitions=8)
+        assert _by_bytes(df).rdd.getNumPartitions() == tasks
+    finally:
+        spark.conf.unset("spark.sql.leafNodeDefaultParallelism")
+
+
+def test_overlap_bounds_the_bytes_in_flight():
+    """The PUT pool runs at most ``budget`` bytes of rows at once (a row
+    larger than the budget alone) and at most ``width`` rows, and yields
+    the results in row order."""
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from dataworks_audit_data_ingest_spark.ingest.pipeline import _overlap
+
+    sizes = [3, 3, 3, 3, 12, 1, 1, 1, 1, 1, 1, 4]
+    lock = threading.Lock()
+    held, peak_bytes, peak_rows, rows = [0], [0], [0], [0]
+
+    def fn(k):
+        with lock:
+            held[0] += sizes[k]
+            rows[0] += 1
+            peak_bytes[0] = max(peak_bytes[0], held[0] if rows[0] > 1 else 0)
+            peak_rows[0] = max(peak_rows[0], rows[0])
+        time.sleep(0.02)
+        with lock:
+            held[0] -= sizes[k]
+            rows[0] -= 1
+        return k
+
+    with ThreadPoolExecutor(10) as pool:
+        out = list(_overlap(pool, fn, range(len(sizes)), sizes, 4, 8))
+    assert out == list(range(len(sizes)))
+    assert peak_bytes[0] <= 8
+    assert peak_rows[0] == 4
 
 
 def test_failed_run_commits_no_day_and_retry_commits_all(
@@ -438,6 +556,33 @@ def test_encrypted_stream_drain_and_resume(spark, moto_s3, rsa_keypair, tmp_path
         obj = s3.get_object(Bucket=cfg.s3_bucket, Key=key)
         assert set(obj["Metadata"]) == {"iv", "ciphertext", "datakeyencryptionkeyid"}
         assert _decrypt(priv, obj) == payload
+
+
+def test_stream_drain_is_one_task_per_micro_batch(
+    spark, moto_s3, rsa_keypair, tmp_path
+):
+    """The stream sink runs the batch kernel, so a micro-batch of small
+    files is one task: the drain and its resume each run one job of one
+    task (a stream's jobs run in a group named by its run id)."""
+    from dataworks_audit_data_ingest_spark.streaming.jobs import (
+        start_encrypted_ingest_stream,
+    )
+
+    _, pub_pem = rsa_keypair
+    src = _tree(
+        tmp_path / "src",
+        {f"2021-01-0{d}/f{i}.json": PAYLOAD_1 for d in (1, 2, 3) for i in range(4)},
+    )
+    cfg = _cfg(src, tmp_path, moto_s3, pub_pem, bucket="stream-tasks-bucket")
+    ckpt = str(tmp_path / "ckpt")
+    for new in ({}, {"2021-01-04/f.json": PAYLOAD_2}):
+        _tree(src, new)
+        query = start_encrypted_ingest_stream(spark, cfg, ckpt)
+        query.awaitTermination(120)
+        group = str(query.runId)
+        assert _tasks_in_group(spark, group) == 1
+        assert len(spark.sparkContext.statusTracker().getJobIdsForGroup(group)) == 1
+    assert len(_keys(moto_s3, cfg.s3_bucket)) == 13
 
 
 def test_encrypt_record_bytes_are_pinned(rsa_keypair):

@@ -94,6 +94,31 @@ def test_spread_noop_when_input_not_statable(spark):
     assert out is df
 
 
+def test_spread_reads_the_split_size_as_spark_does(spark, tmp_path):
+    """The gate reads ``maxPartitionBytes`` through the session's own size
+    parser (``1t`` is a valid size) and is keyed on it: a split size the
+    fixture dir fills ``cores`` times over turns the spread off on the
+    next call, and restoring the conf turns it back on."""
+    from dataworks_audit_data_ingest_spark.tables import spread
+
+    pq.write_table(
+        pa.table({"k": pa.array(range(20_000), pa.int64())}),
+        str(tmp_path / "t.parquet"),
+    )
+    sf = str(tmp_path)
+    df = spark.read.parquet(f"{sf}/t.parquet")
+    cores = spark.sparkContext.defaultParallelism
+    assert spread(df, sf, "k").rdd.getNumPartitions() == cores
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "1t")
+        assert spread(df, sf, "k").rdd.getNumPartitions() == cores
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
+        assert spread(df, sf, "k") is df
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    assert spread(df, sf, "k").rdd.getNumPartitions() == cores
+
+
 def test_spread_keyed_result_invariance(spark):
     """Decimal-exact aggregation is partition-invariant: spread must not
     change any aggregate value (the oracle sweep checks this end-to-end;
@@ -232,6 +257,30 @@ def test_tune_confs_survive_conf_mutating_operator(spark):
     after = {k: spark.conf.get(k) for k in _RUNTIME_CONF}
     assert after == _RUNTIME_CONF
     assert spark.conf.get("spark.sql.scripting.enabled", "false") == scripting_before
+
+
+def test_tune_tries_each_conf_once_per_session():
+    """A conf the deployment refuses is tried once per session object, not
+    again on every later ``tune()`` (every ``table()`` load calls it)."""
+    import types
+
+    from dataworks_audit_data_ingest_spark.session import _RUNTIME_CONF, tune
+
+    refused = "spark.sql.adaptive.skewJoin.enabled"
+    calls = []
+
+    class Conf:
+        def set(self, key, value):
+            calls.append(key)
+            if key == refused:
+                raise RuntimeError(f"{key} is not settable at runtime")
+
+    session = types.SimpleNamespace(
+        conf=Conf(), sparkContext=types.SimpleNamespace(addPyFile=lambda path: None)
+    )
+    tune(session)
+    tune(session)
+    assert calls == list(_RUNTIME_CONF)
 
 
 def test_schema_cache_returns_identical_schema_on_hit(spark):
